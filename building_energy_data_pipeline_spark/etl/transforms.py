@@ -19,6 +19,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType
 
 if TYPE_CHECKING:  # pandas only crosses the wire inside mapInPandas
     import pandas as pd
@@ -48,8 +49,27 @@ def melt_wide(
 
     Scale: unpivot is a generator (rows × n_buildings) inside the
     scan stage — no shuffle; downstream writes partition by ``meter``.
+
+    A CSV column with no values at all is inferred as string, where
+    pandas reads float64 NaN and the reference melts null readings;
+    such columns are cast to the other readings' numeric type (double
+    when there are none). Spotting them costs one job, run only when a
+    string-typed value column exists; a column holding text is left
+    alone, so the unpivot still rejects it beside numeric readings.
     """
-    value_cols = [c for c in df.columns if c != id_col]
+    fields = [f for f in df.schema.fields if f.name != id_col]
+    value_cols = [f.name for f in fields]
+    text_cols = [
+        f.name for f in fields if isinstance(f.dataType, StringType)
+    ]
+    if text_cols:
+        counts = df.select([F.count(df[c]) for c in text_cols]).first()
+        empty = [c for c, n in zip(text_cols, counts) if n == 0]
+        numeric = next(
+            (f.dataType for f in fields if f.name not in text_cols),
+            DoubleType(),
+        )
+        df = df.withColumns({c: df[c].cast(numeric) for c in empty})
     return df.unpivot(
         [id_col], value_cols, var_name, value_name
     ).withColumn("meter", F.lit(meter_type))

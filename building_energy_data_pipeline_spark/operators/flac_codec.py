@@ -1,7 +1,7 @@
 """Pure-Python FLAC codec (public xiph.org FLAC format spec).
 
 The FOURTH compression family to decode natively (deflate → PNG,
-DCT+Huffman/QM → JPEG, LZW → GIF, ADPCM → WAV, and now Rice-coded
+DCT+Huffman → JPEG, LZW → GIF, ADPCM → WAV, and now Rice-coded
 linear prediction → FLAC): no libFLAC, no soundfile — stdlib
 ``struct`` for the metadata walk, a big-endian bit reader for the
 frame layer, numpy for the predictor recursions. Because FLAC is
@@ -33,8 +33,8 @@ Scope (documented, spec-cited):
 
 The compressed stream the encoder emits is real FLAC: a conformant
 third-party decoder would read it — but none exists in this sandbox
-(no libFLAC/soundfile, probe 2026-08-16), so as with the JPEG
-QM-coder the interop claim rests on spec fidelity while the
+(no libFLAC/soundfile, probe 2026-08-16), so the interop claim
+rests on spec fidelity while the
 correctness proof is the internal bit-exact round-trip plus the
 format's own CRCs/MD5, which are independent cross-checks baked
 into the container itself.

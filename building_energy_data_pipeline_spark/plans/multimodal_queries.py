@@ -25,13 +25,7 @@ from pyspark.sql import functions as F
 from ..operators import multimodal
 from ..operators.jpeg_codec import (
     encode_jpeg,
-    encode_jpeg_arithmetic,
-    encode_jpeg_hierarchical,
-    encode_jpeg_hierarchical_dct,
-    encode_jpeg_lossless,
-    encode_jpeg_lossless_arith,
     encode_jpeg_progressive,
-    encode_jpeg_progressive_arithmetic,
 )
 from ..sources.readers import load_table
 from .registry import query
@@ -722,68 +716,32 @@ def q254_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     grayscale pattern pixels (``2·((media_id·7 + (y//8)·5 + (x//8)·3)
     % 128)`` — every 8×8 block constant, every value even) are
     encoded to genuine JPEG payloads in one ``mapInPandas`` stage
-    under an EIGHT-WAY process rotation on ``(media_id//3)%8`` —
-    baseline SOF0 (``operators/jpeg_codec.encode_jpeg``),
-    PROGRESSIVE SOF2 (``encode_jpeg_progressive``: interleaved DC
-    scan + two spectral-selection AC scans with EOB-run coding),
-    ARITHMETIC SOF9 (``encode_jpeg_arithmetic``: the Annex D
-    QM-coder with DAC conditioning), PROGRESSIVE-ARITHMETIC SOF10
-    (``encode_jpeg_progressive_arithmetic``: all four G.2 scan
-    procedures), LOSSLESS SOF3 (``encode_jpeg_lossless``: Annex H
-    spatial DPCM, the predictor rotating over all seven), and —
-    round 11 — ARITHMETIC LOSSLESS SOF11
-    (``encode_jpeg_lossless_arith``: the same DPCM walk under the
-    QM-coder with the H.1.2 two-neighbor conditioning model) plus
-    HIERARCHICAL mode (``encode_jpeg_hierarchical``: Annex J
-    DHP/EXP pyramid, SOF3-or-SOF11 first frame, SOF7/SOF15 lossless
-    differential frames — alternating entropy coders on
-    ``(media_id//21)%2``) plus — the round-11 continuation, closing
-    the last T.81 frame families — HIERARCHICAL DCT
-    (``encode_jpeg_hierarchical_dct``: a LOSSY DCT pyramid —
-    sequential SOF0/SOF9 + SOF5/SOF13 differential frames, or
-    PROGRESSIVE SOF2/SOF10 + SOF6/SOF14 differential frames on
-    ``(media_id//48)%2`` — whose final SOF7/SOF15 lossless
-    differential correction frame makes the stream bit-exact on ANY
-    input; entropy coders alternate on ``(media_id//24)%2``) —
-    the DCT layouts at Annex K quality 50 with a decorrelated
-    rotating ``restart_interval`` of 0/2/5 so they carry DRI + RSTn
-    markers on most payloads — then decoded back by the pure-numpy
-    decoder (fused into the same stage since r13) and reduced to
-    integer channel sums
-    (grayscale replicates across channels, so ``sum_r = sum_g =
+    under a TWO-WAY layout rotation on ``(media_id//3)%2`` — baseline
+    SOF0 (``operators/jpeg_codec.encode_jpeg``) or PROGRESSIVE SOF2
+    (``encode_jpeg_progressive``: interleaved DC scan + two
+    spectral-selection AC scans with EOB-run coding) — at Annex K
+    quality 50 with a decorrelated rotating ``restart_interval`` of
+    0/2/5 on ``(media_id//15)%3``, so most payloads carry DRI + RSTn
+    markers. The payloads are then decoded back by the pure-numpy
+    decoder (fused into the same stage) and reduced to integer channel
+    sums (grayscale replicates across channels, so ``sum_r = sum_g =
     sum_b``).
 
-    Round 12 closed the hierarchical variant gates (VERDICT r11 #4)
-    and rotates them into the payload mix: the lossless layouts
-    (SOF3/SOF11 and the hierarchical pyramid) alternate
-    per-component scans on ``(mid//9)%2`` and point transform
-    ``Pt=(mid//27)%2`` (the pattern's values are even, so ``Pt=1``
-    drops only zero bits in the plain layouts; the hierarchical
-    Pt-refinement pyramid ends with a ``Pt=0`` frame and is exact
-    on any input), the hierarchical pyramid additionally carries
-    the rotating restart interval, and the sequential hierarchical
-    DCT arrangements carry DRI + RSTn too.
-
     The oracle never sees a JPEG byte: it recomputes the sums from
-    the closed-form pattern. The lossy processes get a
-    ZERO-TOLERANCE oracle because the pattern lives on the codec's
-    lossless subspace — a flat block's DCT is DC-only, ``8·(v-128)``
-    divides the Annex K DC quantizer 16 exactly for even ``v``, and
-    every AC coefficient quantizes to zero (SOF3 is exact on ANY
-    input, so the pattern is trivially in its domain) — so the
-    driver hash passes only if the marker walk, entropy decode
-    (Huffman trees, progressive accumulation, the QM-coder's
-    adaptive state machine in both sequential and progressive
-    arrangements, or the DPCM predictor chain), dequantization,
-    IDCT and restart-marker resync reconstruct every pixel exactly —
-    in all EIGHT processes: the quantized coefficients are identical
-    across SOF0/SOF2/SOF9/SOF10, so one closed-form oracle
-    hash-checks every decoder the module ships
-    (``tests/test_jpeg_codec.py`` pins the subspace property itself,
-    hand-built successive-approximation streams, cross-layout decode
-    equality on random images, bit-exact lossless round-trips, and
-    lossy-path tolerance off the subspace). Extends q249's PNG check
-    to the second compressed container; MP3 remains gated.
+    the closed-form pattern. The lossy codec gets a ZERO-TOLERANCE
+    oracle because the pattern lives on its lossless subspace — a
+    flat block's DCT is DC-only, ``8·(v-128)`` divides the Annex K DC
+    quantizer 16 exactly for even ``v``, and every AC coefficient
+    quantizes to zero — so the driver hash passes only if the marker
+    walk, Huffman decode, progressive coefficient accumulation,
+    dequantization, IDCT and restart-marker resync reconstruct every
+    pixel exactly in both layouts. The quantized coefficients are
+    identical across SOF0/SOF2, so one closed-form oracle hash-checks
+    both decoders (``tests/test_jpeg_codec.py`` pins the subspace
+    property itself, hand-built successive-approximation streams,
+    cross-layout decode equality on random images, and lossy-path
+    tolerance off the subspace). Extends q249's PNG check to the
+    second compressed container; MP3 remains gated.
 
     Scale: identical economics to q249 — payloads are born,
     compressed and decoded inside one task; only ~40 bytes of
@@ -820,103 +778,19 @@ def q254_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
                     2 * ((mid * 7 + (y // 8) * 5 + (x // 8) * 3) % 128)
                 ).astype(np.uint8)
                 # media ids are ≡ 2 (mod 3) after the doc filter, so
-                # rotate layout on (mid//3)%8 and decorrelate the
+                # rotate layout on (mid//3)%2 and decorrelate the
                 # restart interval on (mid//15)%3
                 rst = (0, 2, 5)[(mid // 15) % 3]
-                layout = (mid // 3) % 8
-                if layout == 0:
-                    payload = encode_jpeg(
-                        arr, quality=50, restart_interval=rst
-                    )
-                elif layout == 1:
-                    payload = encode_jpeg_progressive(
-                        arr, quality=50, restart_interval=rst
-                    )
-                elif layout == 2:
-                    payload = encode_jpeg_arithmetic(
-                        arr, quality=50, restart_interval=rst
-                    )
-                elif layout == 3:
-                    payload = encode_jpeg_progressive_arithmetic(
-                        arr, quality=50
-                    )
-                elif layout == 4:  # lossless SOF3 — exact on ANY
-                    # input, so the pattern is trivially in its
-                    # domain; round-12 variant axes: per-component
-                    # scans (B.2.3) and point transform (pattern
-                    # values are EVEN, so Pt=1 drops only zero bits —
-                    # still exact)
-                    payload = encode_jpeg_lossless(
-                        arr, predictor=1 + mid % 7,
-                        restart_interval=rst,
-                        interleave=(mid // 9) % 2 == 0,
-                        point_transform=(mid // 27) % 2,
-                    )
-                elif layout == 5:  # arithmetic lossless SOF11
-                    payload = encode_jpeg_lossless_arith(
-                        arr, predictor=1 + mid % 7,
-                        restart_interval=rst,
-                        interleave=(mid // 9) % 2 == 0,
-                        point_transform=(mid // 27) % 2,
-                    )
-                elif layout == 6:  # hierarchical pyramid (round 11):
-                    # lossless differential frames, both entropy
-                    # coders; round-12 variant axes: restart markers,
-                    # per-component scans, and the Pt-refinement
-                    # pyramid (non-final frames at Pt=1, final frame
-                    # Pt=0 — exact on ANY input) inside the
-                    # hierarchical stream
-                    payload = encode_jpeg_hierarchical(
-                        arr, levels=2 + mid % 2,
-                        predictor=1 + mid % 7,
-                        arithmetic=(mid // 21) % 2 == 1,
-                        restart_interval=rst,
-                        interleave=(mid // 9) % 2 == 0,
-                        point_transform=(mid // 27) % 2,
-                    )
-                else:  # hierarchical DCT pyramid (round-11
-                    # continuation): lossy DCT stages — sequential
-                    # SOF0/SOF9+SOF5/SOF13 or progressive
-                    # SOF2/SOF10+SOF6/SOF14 — whose final lossless
-                    # correction frame makes it exact on ANY input;
-                    # round 12 adds restart markers and 12-BIT
-                    # sequential pyramids (samples << 4 on the wire;
-                    # decode_jpeg's uint8 fold shifts them back, so
-                    # the channel sums are unchanged)
-                    prog_f = (mid // 48) % 2 == 1
-                    use12 = (mid // 96) % 2 == 1
-                    # subsampled 4:2:0-style pyramids (the last
-                    # closed gate): the pattern is 8x8-block-flat,
-                    # so 2x decimation + replication reproduces it
-                    # EXACTLY (block size 8 is even) — the oracle's
-                    # channel sums are unchanged on the replicated
-                    # RGB payload
-                    use_samp = not prog_f and (mid // 192) % 2 == 1
-                    src_arr = (
-                        arr.astype(np.uint16) << 4 if use12 else arr
-                    )
-                    if use_samp:
-                        src_arr = np.repeat(
-                            src_arr[..., None], 3, axis=-1
-                        )
-                    payload = encode_jpeg_hierarchical_dct(
-                        src_arr,
-                        quality=50, levels=2 + mid % 2,
-                        arithmetic=(mid // 24) % 2 == 1,
-                        progressive=prog_f,
-                        restart_interval=rst,
-                        precision=12 if use12 else 8,
-                        interleave=(mid // 9) % 2 == 0,
-                        sampling=(
-                            ((1, 1), (2, 2), (2, 2))
-                            if use_samp else None
-                        ),
-                    )
+                encode = (
+                    encode_jpeg_progressive if (mid // 3) % 2
+                    else encode_jpeg
+                )
+                payload = encode(arr, quality=50, restart_interval=rst)
                 rows.append({"media_id": mid, "content": payload})
             yield pd.DataFrame(rows, columns=["media_id", "content"])
 
     def synth_sums(batches):
-        # r13: synth + the eight-process JPEG decode fused into ONE
+        # r13: synth + the two-layout JPEG decode fused into ONE
         # mapInPandas stage; trailing orderBy dropped (q249's note)
         return multimodal.channel_sums_batches(
             synth_encode(batches), use_real_codec=True
@@ -953,7 +827,7 @@ def q254_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q259_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossless-audio-codec round-trip through the driver
     contract — the FOURTH compression family (Rice-coded linear
-    prediction, after deflate/DCT+Huffman+QM/LZW/ADPCM): closed-form
+    prediction, after deflate/DCT+Huffman/LZW/ADPCM): closed-form
     int16 samples (``(media_id·211 + k·97) % 4001 − 2000``) are
     encoded to genuine FLAC streams in one ``mapInPandas`` stage
     (``operators/flac_codec.encode_flac``: fixed-blocking frames,

@@ -137,6 +137,20 @@ def _normalize_ts(df: DataFrame, path: str | None = None) -> DataFrame:
     return df
 
 
+def _tree_stats(root: str, prefix: str = "") -> tuple:
+    """``(relative path, mtime_ns, size)`` of every entry below
+    ``root``, depth-first in name order."""
+    with os.scandir(root) as it:
+        entries = sorted(it, key=lambda e: e.name)
+    out: list = []
+    for e in entries:
+        st = e.stat()
+        out.append((prefix + e.name, st.st_mtime_ns, st.st_size))
+        if e.is_dir():
+            out.extend(_tree_stats(e.path, f"{prefix}{e.name}/"))
+    return tuple(out)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one testdata table. Plain ``spark.read.parquet`` — column
     pruning and predicate pushdown reach the scan automatically.
@@ -167,13 +181,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         if stat.S_ISDIR(st.st_mode):
             # a directory's own (mtime, size) misses an in-place
             # rewrite of a part file (no create/rename/delete touches
-            # the dir entry), so fold the child listing's stats into
-            # the key (ADVICE r13). Spark's own writers always write
+            # the dir entry), so fold the stats of the whole tree —
+            # hive ``k=v/`` subdirectories included — into the key
+            # (ADVICE r13). Spark's own writers always write
             # fresh-named parts, but external overwrites must miss too.
-            key += tuple(
-                (e.name, e.stat().st_mtime_ns, e.stat().st_size)
-                for e in sorted(os.scandir(path), key=lambda e: e.name)
-            )
+            key += _tree_stats(path)
     except OSError:  # non-local FS → skip memoization
         key = None
     cache: dict | None = getattr(spark, "_bedp_table_plans", None)

@@ -298,8 +298,10 @@ def _streaming_probes(spark, sf_dir: str) -> dict:
         for name, (df, mode) in probes.items():
             ck = tempfile.mkdtemp(prefix=f"scaleproof_{name}_")
             try:
-                # drain wall (r14, VERDICT r13 #9): time from .start()
-                # to terminated — the availableNow end-to-end drain,
+                # drain wall (r14, VERDICT r13 #9): time from just
+                # before the writeStream definition (t0 below, so the
+                # sink/trigger setup and .start() are inside it) to
+                # terminated — the availableNow end-to-end drain,
                 # checkpoint dir creation excluded (mkdtemp above),
                 # the streaming family's first measured perf baseline.
                 t0 = time.time()

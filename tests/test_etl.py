@@ -208,6 +208,41 @@ class TestTransformSources:
         assert set(meta_out.columns) == {"building_id", "sqft"}
         assert meta_out.count() == 2
 
+    def test_empty_meter_column_melts_to_null_readings(self, spark, tmp_path):
+        # a building column with no values is typed string by the CSV
+        # schema pass; pandas reads it as float64 NaN, so the melt
+        # keeps its rows as null readings
+        raw = tmp_path / "src" / "raw"
+        raw.mkdir(parents=True)
+        (raw / "electricity.csv").write_text(
+            "timestamp,b1,b2,b3\n2016-01-01 00:00:00,1.5,,2.0\n"
+            "2016-01-01 01:00:00,3.0,,4.0\n"
+            "2016-01-01 02:00:00,5.0,,6.5\n"
+        )
+        folders = find_sources(str(tmp_path / "src"), "csv")
+        out = transform_sources(spark, folders, str(tmp_path / "out"))
+
+        got = spark.read.parquet(out["raw"])
+        assert dict(got.dtypes)["meter_reading"] == "double"
+        assert got.count() == 3 * 3  # rows × columns, nulls included
+        readings = {
+            r["building_id"]: r["n"]
+            for r in got.groupBy("building_id")
+            .agg(F.count("meter_reading").alias("n"))
+            .collect()
+        }
+        assert readings == {"b1": 3, "b2": 0, "b3": 3}
+
+    def test_text_meter_column_still_fails(self, spark, tmp_path):
+        raw = tmp_path / "src" / "raw"
+        raw.mkdir(parents=True)
+        (raw / "gas.csv").write_text(
+            "timestamp,b1,b2\n2016-01-01 00:00:00,1.0,n/a\n"
+        )
+        folders = find_sources(str(tmp_path / "src"), "csv")
+        with pytest.raises(Exception, match="UNPIVOT_VALUE_DATA_TYPE"):
+            transform_sources(spark, folders, str(tmp_path / "out"))
+
 
 # ---------------------------------------------------------------------------
 # Overlap gate truth table (J1/J2)

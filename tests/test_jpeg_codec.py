@@ -198,9 +198,11 @@ class TestVariantAndCorruptionContract:
         return encode_jpeg(np.full((8, 8), 100, dtype=np.uint8), 50)
 
     def test_remaining_sof_modes_gated(self):
-        """Round 10 closed SOF3/SOF9/SOF10/12-bit-SOF1; what remains
-        gated is the differential/hierarchical family (SOF5-7,
-        SOF13-15) and arithmetic lossless (SOF11)."""
+        """Only SOF0/SOF1/SOF2 Huffman frames decode: the differential
+        family (SOF5-7, SOF13-15), lossless (SOF3), arithmetic coding
+        (SOF9/10/11) and hierarchical streams (DHP) are unsupported
+        spec features — NotImplementedError, never ValueError and
+        never pixels."""
         for sof in (0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF):
             enc = bytearray(self._enc())
             enc[enc.index(b"\xff\xc0") + 1] = sof
@@ -208,12 +210,35 @@ class TestVariantAndCorruptionContract:
                 NotImplementedError, match="differential|hierarch"
             ):
                 decode_jpeg(bytes(enc))
+        for sof, name in (
+            (0xC3, "lossless"),
+            (0xC9, "arithmetic"),
+            (0xCA, "arithmetic"),
+            (0xCB, "arithmetic"),
+        ):
+            enc = bytearray(self._enc())
+            enc[enc.index(b"\xff\xc0") + 1] = sof
+            with pytest.raises(NotImplementedError, match=name):
+                decode_jpeg(bytes(enc))
+        # DHP (0xDE) ahead of the frame: same SOF-shaped body,
+        # announces a hierarchical stream
+        enc = bytearray(self._enc())
+        sof = enc.index(b"\xff\xc0")
+        seglen = struct.unpack(">H", enc[sof + 2 : sof + 4])[0]
+        dhp = b"\xff\xde" + bytes(enc[sof + 2 : sof + 2 + seglen])
+        with pytest.raises(NotImplementedError, match="hierarch"):
+            decode_jpeg(bytes(enc[:sof]) + dhp + bytes(enc[sof:]))
 
     def test_twelve_bit_precision_gated(self):
-        enc = bytearray(self._enc())
-        enc[enc.index(b"\xff\xc0") + 4] = 12
-        with pytest.raises(NotImplementedError, match="12-bit"):
-            decode_jpeg(bytes(enc))
+        """8-bit samples only: 12-bit under SOF0 (illegal) and under
+        SOF1/SOF2 (extended/progressive 12-bit) is unsupported."""
+        for sof in (0xC0, 0xC1, 0xC2):
+            enc = bytearray(self._enc())
+            i = enc.index(b"\xff\xc0")
+            enc[i + 1] = sof
+            enc[i + 4] = 12
+            with pytest.raises(NotImplementedError, match="12-bit"):
+                decode_jpeg(bytes(enc))
 
     def test_large_sampling_factor_gated(self):
         enc = bytearray(self._enc())
@@ -641,346 +666,6 @@ class TestFillBytes:
         )
 
 
-class TestArithmetic:
-    """SOF9 arithmetic coding (Annex D QM-coder + Annex F decision
-    trees): cross-layout decode equality against the baseline
-    Huffman encoder from identical quantized coefficients, the
-    DC-only lossless subspace, restart markers, DAC parsing, the
-    compression advantage, and the corruption contract. Interop with
-    external codecs is untestable here (no libjpeg/PIL) — the
-    round-trip proof is internal by design, the same honesty note as
-    the progressive SA streams."""
-
-    def test_cross_layout_equality_gray(self):
-        rng = np.random.default_rng(7)
-        for _ in range(10):
-            h, w = int(rng.integers(1, 50)), int(rng.integers(1, 50))
-            arr = rng.integers(0, 256, (h, w), dtype=np.uint8)
-            base = decode_jpeg(encode_jpeg(arr, 50))
-            arith = decode_jpeg(jc.encode_jpeg_arithmetic(arr, 50))
-            assert np.array_equal(base, arith)
-
-    def test_cross_layout_equality_color_both_subsamplings(self):
-        rng = np.random.default_rng(11)
-        for sub in ("444", "420"):
-            arr = rng.integers(0, 256, (21, 34, 3), dtype=np.uint8)
-            base = decode_jpeg(encode_jpeg(arr, 50, sub))
-            arith = decode_jpeg(
-                jc.encode_jpeg_arithmetic(arr, 50, sub)
-            )
-            assert np.array_equal(base, arith)
-
-    def test_lossless_subspace_exact(self):
-        arr = _block_flat_gray(5, 24, 40)
-        got = decode_jpeg(jc.encode_jpeg_arithmetic(arr, 50))
-        assert np.array_equal(got[..., 0], arr)
-        assert np.array_equal(got[..., 1], arr)
-
-    def test_restart_markers_round_trip(self):
-        rng = np.random.default_rng(13)
-        arr = rng.integers(0, 256, (40, 56), dtype=np.uint8)
-        for rst in (1, 2, 5):
-            enc = jc.encode_jpeg_arithmetic(
-                arr, 50, restart_interval=rst
-            )
-            assert b"\xff\xdd" in enc  # DRI present
-            assert b"\xff\xd0" in enc  # at least RST0 fired
-            assert np.array_equal(
-                decode_jpeg(enc), decode_jpeg(encode_jpeg(arr, 50))
-            )
-
-    def test_stream_declares_sof9_and_dac(self):
-        enc = jc.encode_jpeg_arithmetic(
-            _block_flat_gray(1, 16, 16), 50
-        )
-        assert b"\xff\xc9" in enc  # SOF9
-        assert b"\xff\xcc" in enc  # DAC
-        assert b"\xff\xc4" not in enc  # no Huffman tables
-
-    def test_nondefault_dac_conditioning_round_trips(self):
-        """The decoder must honor DAC values, not assume defaults:
-        re-point the DAC at a different Kx and a wider DC band and
-        check the stream still decodes (encoder twin built with the
-        same conditioning by patching the emitted segment is not
-        possible — instead decode a stream whose DAC matches what
-        the encoder actually used, then corrupt the DAC and confirm
-        the result CHANGES, proving the values are read)."""
-        rng = np.random.default_rng(17)
-        arr = rng.integers(0, 256, (24, 24), dtype=np.uint8)
-        enc = bytearray(jc.encode_jpeg_arithmetic(arr, 50))
-        good = decode_jpeg(bytes(enc))
-        i = bytes(enc).index(b"\xff\xcc")
-        # DAC layout: FF CC len(2) then [Tc/Tb, Cs] pairs — flip the
-        # AC Kx (5 -> 63); entry order (0,0,0x10), (1,0,5)
-        assert enc[i + 5] == 0x10  # DC conditioning value (L=0,U=1)
-        assert enc[i + 6] == 0x10  # second pair's Tc/Tb (class 1)
-        assert enc[i + 7] == 5  # AC Kx
-        enc[i + 7] = 63
-        changed = decode_jpeg(bytes(enc))
-        assert not np.array_equal(good, changed)
-
-    def test_compression_beats_huffman_on_natural_content(self):
-        y, x = np.mgrid[0:64, 0:64]
-        img = ((y * 2 + x * 3) % 256).astype(np.uint8)
-        huff = encode_jpeg(img, 75)
-        arith = jc.encode_jpeg_arithmetic(img, 75)
-        assert len(arith) < len(huff)
-
-    def test_truncated_arithmetic_stream_valueerror_or_decodes(self):
-        """Zero-fill past the scan end is SPEC behavior (D.2.6), so
-        a truncated stream may decode to garbage rather than raise —
-        but it must never crash with a non-contract exception."""
-        enc = jc.encode_jpeg_arithmetic(
-            _block_flat_gray(3, 16, 16), 50
-        )
-        for cut in (len(enc) // 2, len(enc) - 3):
-            try:
-                out = decode_jpeg(enc[:cut])
-                assert out.dtype == np.uint8
-            except ValueError:
-                pass
-
-    def test_differential_still_gated(self):
-        """SOF5 (differential sequential) remains NotImplementedError
-        (SOF11 left this gate in round 11 — only the hierarchical/
-        differential family is still out of scope); the message names
-        everything that IS supported."""
-        enc = bytearray(
-            jc.encode_jpeg_arithmetic(_block_flat_gray(2, 8, 8), 50)
-        )
-        i = bytes(enc).index(b"\xff\xc9")
-        enc[i + 1] = 0xC5  # SOF9 -> SOF5
-        with pytest.raises(NotImplementedError, match="hierarch"):
-            decode_jpeg(bytes(enc))
-
-    @given(
-        seed=st.integers(0, 10_000),
-        h=st.integers(1, 33),
-        w=st.integers(1, 33),
-        rst=st.sampled_from([0, 0, 0, 2, 4]),
-    )
-    @settings(max_examples=25, deadline=None)
-    def test_fuzz_cross_layout_equality(self, seed, h, w, rst):
-        rng = np.random.default_rng(seed)
-        arr = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        base = decode_jpeg(
-            encode_jpeg(arr, 50, restart_interval=rst)
-        )
-        arith = decode_jpeg(
-            jc.encode_jpeg_arithmetic(arr, 50, restart_interval=rst)
-        )
-        assert np.array_equal(base, arith)
-
-    def test_qm_state_table_shape(self):
-        """113 adaptive states + the fixed bin; every transition
-        stays in range and the fixed bin self-loops without
-        adapting."""
-        tab = jc._ARITH_TAB
-        assert len(tab) == 114
-        for qe, nmps, nlps, sw in tab:
-            assert 0 < qe <= 0x5B12
-            assert 0 <= nmps <= 113 and 0 <= nlps <= 113
-            assert sw in (0, 1)
-        assert tab[113][1] == 113 and tab[113][2] == 113
-        assert tab[113][3] == 0
-
-
-class TestLossless:
-    """SOF3 lossless JPEG (Annex H spatial DPCM): the first codec in
-    the module with a BIT-EXACT contract on arbitrary inputs — no
-    subspace argument needed. All seven predictors, 8/12/16-bit
-    precision, point transform, restart markers (with the H.1.2.2
-    first-line-after-restart predictor rules), category-16
-    differences, and the uint8 RGB return contract."""
-
-    def test_exact_round_trip_all_predictors_gray_and_rgb(self):
-        rng = np.random.default_rng(31)
-        for pred in range(1, 8):
-            arr = rng.integers(0, 256, (13, 17), dtype=np.uint8)
-            raw, prec = jc.decode_jpeg_lossless_raw(
-                jc.encode_jpeg_lossless(arr, pred)
-            )
-            assert prec == 8
-            assert np.array_equal(raw[..., 0], arr)
-            rgb = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-            assert np.array_equal(
-                decode_jpeg(jc.encode_jpeg_lossless(rgb, pred)), rgb
-            )
-
-    def test_high_precision_round_trip(self):
-        rng = np.random.default_rng(37)
-        for prec in (12, 16):
-            arr = rng.integers(
-                0, 1 << prec, (10, 14), dtype=np.uint16
-            )
-            raw, p = jc.decode_jpeg_lossless_raw(
-                jc.encode_jpeg_lossless(arr, 4, precision=prec)
-            )
-            assert p == prec
-            assert np.array_equal(raw[..., 0], arr)
-
-    def test_point_transform_quantizes_low_bits(self):
-        rng = np.random.default_rng(41)
-        arr = rng.integers(0, 256, (8, 8), dtype=np.uint8)
-        raw, _ = jc.decode_jpeg_lossless_raw(
-            jc.encode_jpeg_lossless(arr, 1, point_transform=2)
-        )
-        assert np.array_equal(raw[..., 0], (arr >> 2) << 2)
-
-    def test_restart_markers_round_trip(self):
-        rng = np.random.default_rng(43)
-        arr = rng.integers(0, 256, (20, 30), dtype=np.uint8)
-        # interval 64 restarts MID-line (w=30): exercises the
-        # H.1.2.2 "rest of the restart line predicts from Ra" rule
-        enc = jc.encode_jpeg_lossless(arr, 5, restart_interval=64)
-        assert b"\xff\xd0" in enc
-        raw, _ = jc.decode_jpeg_lossless_raw(enc)
-        assert np.array_equal(raw[..., 0], arr)
-
-    def test_category_16_difference(self):
-        arr = np.array([[0, 65535], [65535, 0]], dtype=np.uint16)
-        raw, _ = jc.decode_jpeg_lossless_raw(
-            jc.encode_jpeg_lossless(arr, 1, precision=16)
-        )
-        assert np.array_equal(raw[..., 0], arr)
-
-    def test_out_of_range_samples_raise(self):
-        """ADVICE r10 #4: the corrupt-payload = ValueError contract.
-        Encode a 16-bit sample above 255, then patch the SOF3
-        precision byte down to 8 — the modulo-2^16 reconstruction now
-        lands outside [0, 255], which a legal 8-bit stream cannot do,
-        so decode must raise instead of silently masking."""
-        arr = np.array([[40000]], dtype=np.uint16)
-        enc = bytearray(jc.encode_jpeg_lossless(arr, 1, precision=16))
-        sof = enc.index(b"\xff\xc3")
-        assert enc[sof + 4] == 16  # precision byte after marker+length
-        enc[sof + 4] = 8
-        with pytest.raises(ValueError, match="outside"):
-            jc.decode_jpeg_lossless_raw(bytes(enc))
-
-    def test_gray_rgb_return_contract(self):
-        rng = np.random.default_rng(47)
-        g = rng.integers(0, 256, (5, 5), dtype=np.uint8)
-        out = decode_jpeg(jc.encode_jpeg_lossless(g, 4))
-        assert out.shape == (5, 5, 3)
-        assert np.array_equal(out[..., 0], g)
-        assert np.array_equal(out[..., 1], g)
-
-    def test_twelve_bit_decode_jpeg_scales_to_uint8(self):
-        rng = np.random.default_rng(53)
-        arr = rng.integers(0, 4096, (6, 7), dtype=np.uint16)
-        out = decode_jpeg(
-            jc.encode_jpeg_lossless(arr, 2, precision=12)
-        )
-        assert np.array_equal(out[..., 0], (arr >> 4).astype(np.uint8))
-
-    def test_rejects_bad_arguments(self):
-        arr = np.zeros((4, 4), dtype=np.uint8)
-        with pytest.raises(ValueError, match="predictor"):
-            jc.encode_jpeg_lossless(arr, 0)
-        with pytest.raises(ValueError, match="predictor"):
-            jc.encode_jpeg_lossless(arr, 8)
-        with pytest.raises(ValueError, match="precision"):
-            jc.encode_jpeg_lossless(arr, 1, precision=17)
-        with pytest.raises(ValueError, match="point transform"):
-            jc.encode_jpeg_lossless(arr, 1, point_transform=8)
-        with pytest.raises(ValueError, match="range"):
-            jc.encode_jpeg_lossless(
-                np.full((4, 4), 255, dtype=np.uint8), 1, precision=7
-            )
-
-    def test_corrupt_stream_contract(self):
-        enc = bytearray(
-            jc.encode_jpeg_lossless(
-                np.arange(64, dtype=np.uint8).reshape(8, 8), 4
-            )
-        )
-        # invalid predictor selector in SOS
-        # SOS layout: FF DA len(2) ns [cs td] Ss Se AhAl — for the
-        # 1-component stream Ss sits at i+7
-        i = bytes(enc).index(b"\xff\xda")
-        bad = bytearray(enc)
-        bad[i + 7] = 0  # Ss = 0 (only legal hierarchically)
-        with pytest.raises(ValueError, match="predictor"):
-            decode_jpeg(bytes(bad))
-        # truncated entropy stream
-        with pytest.raises(ValueError):
-            decode_jpeg(bytes(enc[: len(enc) // 2]))
-
-    @given(
-        seed=st.integers(0, 10_000),
-        h=st.integers(1, 20),
-        w=st.integers(1, 20),
-        pred=st.integers(1, 7),
-    )
-    @settings(max_examples=25, deadline=None)
-    def test_fuzz_exact_round_trip(self, seed, h, w, pred):
-        rng = np.random.default_rng(seed)
-        arr = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        raw, _ = jc.decode_jpeg_lossless_raw(
-            jc.encode_jpeg_lossless(arr, pred)
-        )
-        assert np.array_equal(raw[..., 0], arr)
-
-
-class TestTwelveBit:
-    """SOF1 extended sequential at 12-bit precision: level shift
-    2048, 16-bit DQT (Pq=1), DC categories to 15, AC sizes to 14;
-    `decode_jpeg` folds back to the uint8 contract via >> 4. SOF0
-    at 12-bit stays rejected (baseline is 8-bit by spec)."""
-
-    def test_flat_even_block_subspace_exact(self):
-        rng = np.random.default_rng(61)
-        vals = (rng.integers(0, 128, (3, 4)) * 32).astype(np.uint16)
-        arr = np.repeat(np.repeat(vals, 8, 0), 8, 1)
-        dec = decode_jpeg(jc.encode_jpeg_12bit(arr, 50))
-        assert np.array_equal(
-            dec[..., 0], (arr >> 4).astype(np.uint8)
-        )
-
-    def test_smooth_content_q90_within_one(self):
-        y, x = np.mgrid[0:32, 0:40]
-        img = ((y * 53 + x * 31) % 4096).astype(np.uint16)
-        dec = decode_jpeg(jc.encode_jpeg_12bit(img, 90))
-        err = np.abs(
-            dec[..., 0].astype(int) - (img >> 4).astype(int)
-        )
-        assert err.max() <= 2
-
-    def test_restart_markers_do_not_change_pixels(self):
-        y, x = np.mgrid[0:24, 0:24]
-        img = ((y * 7 + x * 11) % 4096).astype(np.uint16)
-        plain = decode_jpeg(jc.encode_jpeg_12bit(img, 90))
-        rst = decode_jpeg(
-            jc.encode_jpeg_12bit(img, 90, restart_interval=2)
-        )
-        assert np.array_equal(plain, rst)
-
-    def test_sixteen_bit_dqt_emitted(self):
-        arr = np.zeros((8, 8), dtype=np.uint16)
-        enc = jc.encode_jpeg_12bit(arr, 50)
-        i = enc.index(b"\xff\xdb")
-        assert enc[i + 4] >> 4 == 1  # Pq = 1 (16-bit entries)
-        assert b"\xff\xc1" in enc  # SOF1
-
-    def test_twelve_bit_sof0_rejected(self):
-        enc = bytearray(
-            jc.encode_jpeg_12bit(np.zeros((8, 8), dtype=np.uint16), 50)
-        )
-        i = bytes(enc).index(b"\xff\xc1")
-        enc[i + 1] = 0xC0
-        with pytest.raises(NotImplementedError, match="12-bit"):
-            decode_jpeg(bytes(enc))
-
-    def test_range_and_dtype_validation(self):
-        with pytest.raises(ValueError, match="uint16"):
-            jc.encode_jpeg_12bit(np.zeros((4, 4), dtype=np.uint8))
-        with pytest.raises(ValueError, match="12-bit"):
-            jc.encode_jpeg_12bit(
-                np.full((4, 4), 5000, dtype=np.uint16)
-            )
-
-
 class TestNonInterleavedSequential:
     """A.2.2 non-interleaved baseline: a color image sent as one
     scan PER COMPONENT (each on its own ceil(dim/8) block grid,
@@ -1055,837 +740,3 @@ class TestNonInterleavedSequential:
             encode_jpeg(rgb, 50, scan_plan=((0,), (1,)))
         with pytest.raises(ValueError, match="scan_plan"):
             encode_jpeg(rgb, 50, scan_plan=((0, 0, 1, 2),))
-
-
-class TestProgressiveArithmetic:
-    """SOF10 (Annex G.2): the fourth entropy arrangement under the
-    same cross-layout proof — DC first/refine and AC first/refine
-    scans all QM-coded. Pixels must equal the baseline layout
-    exactly (identical quantized coefficients)."""
-
-    def test_cross_layout_equality_gray(self):
-        rng = np.random.default_rng(83)
-        for _ in range(6):
-            h, w = int(rng.integers(1, 45)), int(rng.integers(1, 45))
-            g = rng.integers(0, 256, (h, w), dtype=np.uint8)
-            base = decode_jpeg(encode_jpeg(g, 50))
-            pa = decode_jpeg(
-                jc.encode_jpeg_progressive_arithmetic(g, 50)
-            )
-            assert np.array_equal(base, pa)
-
-    def test_cross_layout_equality_color(self):
-        rng = np.random.default_rng(89)
-        rgb = rng.integers(0, 256, (22, 19, 3), dtype=np.uint8)
-        base = decode_jpeg(encode_jpeg(rgb, 50))
-        pa = decode_jpeg(
-            jc.encode_jpeg_progressive_arithmetic(rgb, 50)
-        )
-        assert np.array_equal(base, pa)
-
-    def test_stream_structure(self):
-        rgb = np.zeros((16, 16, 3), dtype=np.uint8)
-        enc = jc.encode_jpeg_progressive_arithmetic(rgb, 50)
-        assert b"\xff\xca" in enc  # SOF10
-        assert b"\xff\xcc" in enc  # DAC
-        assert b"\xff\xc4" not in enc  # no Huffman tables
-        # DC first + DC refine + 3 comps x (2 AC first + 1 refine)
-        assert enc.count(b"\xff\xda") == 2 + 3 * 3
-
-    def test_lossless_subspace_exact(self):
-        arr = _block_flat_gray(9, 24, 32)
-        got = decode_jpeg(
-            jc.encode_jpeg_progressive_arithmetic(arr, 50)
-        )
-        assert np.array_equal(got[..., 0], arr)
-
-    def test_all_four_layouts_agree(self):
-        """One image, four entropy arrangements, one pixel result."""
-        rng = np.random.default_rng(97)
-        g = rng.integers(0, 256, (33, 29), dtype=np.uint8)
-        outs = [
-            decode_jpeg(encode_jpeg(g, 50)),
-            decode_jpeg(jc.encode_jpeg_progressive(g, 50)),
-            decode_jpeg(jc.encode_jpeg_arithmetic(g, 50)),
-            decode_jpeg(jc.encode_jpeg_progressive_arithmetic(g, 50)),
-        ]
-        for other in outs[1:]:
-            assert np.array_equal(outs[0], other)
-
-    @given(seed=st.integers(0, 10_000), h=st.integers(1, 25),
-           w=st.integers(1, 25))
-    @settings(max_examples=15, deadline=None)
-    def test_fuzz_cross_layout_equality(self, seed, h, w):
-        rng = np.random.default_rng(seed)
-        g = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        assert np.array_equal(
-            decode_jpeg(encode_jpeg(g, 50)),
-            decode_jpeg(jc.encode_jpeg_progressive_arithmetic(g, 50)),
-        )
-
-
-class TestArithmeticLossless:
-    """SOF11 (round 11 — the last non-hierarchical T.81 process):
-    Annex H DPCM under the QM-coder with the H.1.2 two-neighbor
-    conditioning (25 contexts from the 5-way Da/Db classifications,
-    dual magnitude regions). Bit-exact on arbitrary inputs, like
-    SOF3 — and decode-equal to SOF3 from identical samples, the
-    cross-layout proof extended to the sixth entropy/mode pairing."""
-
-    def test_exact_round_trip_all_predictors_gray_and_rgb(self):
-        rng = np.random.default_rng(61)
-        for pred in range(1, 8):
-            arr = rng.integers(0, 256, (13, 17), dtype=np.uint8)
-            raw, prec = jc.decode_jpeg_lossless_raw(
-                jc.encode_jpeg_lossless_arith(arr, pred)
-            )
-            assert prec == 8
-            assert np.array_equal(raw[..., 0], arr)
-        rgb = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-        assert np.array_equal(
-            decode_jpeg(jc.encode_jpeg_lossless_arith(rgb, 4)), rgb
-        )
-
-    def test_cross_layout_equality_with_sof3(self):
-        rng = np.random.default_rng(67)
-        arr = rng.integers(0, 4096, (12, 9), dtype=np.uint16)
-        a, pa = jc.decode_jpeg_lossless_raw(
-            jc.encode_jpeg_lossless_arith(arr, 6, precision=12)
-        )
-        h_, ph = jc.decode_jpeg_lossless_raw(
-            jc.encode_jpeg_lossless(arr, 6, precision=12)
-        )
-        assert pa == ph == 12
-        assert np.array_equal(a, h_)
-
-    def test_high_precision_and_category16_extremes(self):
-        arr = np.array([[0, 65535], [65535, 0]], dtype=np.uint16)
-        raw, _ = jc.decode_jpeg_lossless_raw(
-            jc.encode_jpeg_lossless_arith(arr, 1, precision=16)
-        )
-        assert np.array_equal(raw[..., 0], arr)
-
-    def test_point_transform_and_restart(self):
-        rng = np.random.default_rng(71)
-        arr = rng.integers(0, 256, (8, 8), dtype=np.uint8)
-        raw, _ = jc.decode_jpeg_lossless_raw(
-            jc.encode_jpeg_lossless_arith(arr, 1, point_transform=2)
-        )
-        assert np.array_equal(raw[..., 0], (arr >> 2) << 2)
-        arr = rng.integers(0, 256, (20, 30), dtype=np.uint8)
-        # interval 64 restarts MID-line: both halves must reset the
-        # QM-coder, the stats area AND the neighbor-diff memory at
-        # the same sample
-        enc = jc.encode_jpeg_lossless_arith(arr, 5, restart_interval=64)
-        assert b"\xff\xd0" in enc
-        raw, _ = jc.decode_jpeg_lossless_raw(enc)
-        assert np.array_equal(raw[..., 0], arr)
-
-    def test_conditioning_compresses_smooth_content(self):
-        # a diagonal gradient has constant predictor-4 diffs: the
-        # adaptive zero-context should crush it far below the
-        # Huffman layout's fixed ~5.x bits/sample floor
-        smooth = np.add.outer(
-            np.arange(64), np.arange(64)
-        ).astype(np.uint8)
-        e_a = jc.encode_jpeg_lossless_arith(smooth, 4)
-        e_h = jc.encode_jpeg_lossless(smooth, 4)
-        assert len(e_a) < len(e_h) / 10
-        raw, _ = jc.decode_jpeg_lossless_raw(e_a)
-        assert np.array_equal(raw[..., 0], smooth)
-
-    def test_corruption_raises_never_wrong_pixels(self):
-        rng = np.random.default_rng(73)
-        arr = rng.integers(0, 256, (10, 10), dtype=np.uint8)
-        enc = bytearray(jc.encode_jpeg_lossless_arith(arr, 4))
-        sos = bytes(enc).index(b"\xff\xda")
-        # flip one bit mid-scan: either a ValueError (the contract)
-        # or a clean decode that must NOT silently differ in shape
-        flipped = 0
-        for off in range(sos + 12, min(sos + 24, len(enc) - 2)):
-            mut = bytearray(enc)
-            mut[off] ^= 0x40
-            flipped += 1
-            try:
-                raw, _ = jc.decode_jpeg_lossless_raw(bytes(mut))
-                assert raw.shape == (10, 10, 1)
-            except ValueError:
-                pass
-        assert flipped > 0
-
-    @given(
-        seed=st.integers(0, 10_000),
-        h=st.integers(1, 17),
-        w=st.integers(1, 17),
-        pred=st.integers(1, 7),
-    )
-    @settings(max_examples=25, deadline=None)
-    def test_fuzz_bit_exact(self, seed, h, w, pred):
-        rng = np.random.default_rng(seed)
-        arr = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        raw, _ = jc.decode_jpeg_lossless_raw(
-            jc.encode_jpeg_lossless_arith(arr, pred)
-        )
-        assert np.array_equal(raw[..., 0], arr)
-
-
-class TestHierarchical:
-    """Annex J hierarchical mode (round 11): DHP/EXP markers, a
-    decimation pyramid, the smallest level coded with the ordinary
-    lossless process and every larger level as a LOSSLESS
-    differential frame (SOF7 Huffman / SOF15 arithmetic) against the
-    J.1.1.2 bilinear-expanded reference — bit-exact end-to-end."""
-
-    def test_exact_round_trip_depths_and_coders(self):
-        rng = np.random.default_rng(83)
-        for arith in (False, True):
-            for levels in (1, 2, 3):
-                arr = rng.integers(0, 256, (13, 17), dtype=np.uint8)
-                raw, prec = jc.decode_jpeg_hierarchical_raw(
-                    jc.encode_jpeg_hierarchical(
-                        arr, levels=levels, arithmetic=arith
-                    )
-                )
-                assert prec == 8
-                assert np.array_equal(raw[..., 0], arr)
-
-    def test_rgb_and_marker_anatomy(self):
-        rng = np.random.default_rng(89)
-        rgb = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-        enc = jc.encode_jpeg_hierarchical(rgb, levels=3)
-        for m in (b"\xff\xde", b"\xff\xdf", b"\xff\xc3", b"\xff\xc7"):
-            assert m in enc  # DHP, EXP, first frame, differential
-        assert np.array_equal(decode_jpeg(enc), rgb)
-
-    def test_sixteen_bit_deep_arithmetic_pyramid(self):
-        rng = np.random.default_rng(97)
-        arr = rng.integers(0, 1 << 16, (21, 15), dtype=np.uint16)
-        enc = jc.encode_jpeg_hierarchical(
-            arr, precision=16, levels=4, arithmetic=True
-        )
-        assert b"\xff\xcb" in enc and b"\xff\xcf" in enc
-        raw, p = jc.decode_jpeg_hierarchical_raw(enc)
-        assert p == 16
-        assert np.array_equal(raw[..., 0], arr)
-
-    def test_expansion_is_the_spec_midpoint_filter(self):
-        # out[2i] = in[i]; out[2i+1] = (in[i] + in[i+1] + 1) >> 1,
-        # edge-replicated, cropped to the frame
-        ref = np.array([[0, 10], [20, 30]], dtype=np.int64)
-        up = jc._expand_ref(ref, 4, 4, 1, 1)
-        want = np.array(
-            [[0, 5, 10, 10],
-             [10, 15, 20, 20],
-             [20, 25, 30, 30],
-             [20, 25, 30, 30]],
-            dtype=np.int64,
-        )
-        assert np.array_equal(up, want)
-        # odd-crop: a 2x2 reference expanding into a 3x3 frame
-        assert np.array_equal(
-            jc._expand_ref(ref, 3, 3, 1, 1), want[:3, :3]
-        )
-
-    def test_pyramid_compresses_smooth_content(self):
-        smooth = np.add.outer(
-            np.arange(64), np.arange(64)
-        ).astype(np.uint8)
-        e = jc.encode_jpeg_hierarchical(smooth, levels=3, arithmetic=True)
-        assert len(e) < smooth.size / 10
-        raw, _ = jc.decode_jpeg_hierarchical_raw(e)
-        assert np.array_equal(raw[..., 0], smooth)
-
-    def test_bare_differential_frame_still_gated(self):
-        # a differential frame OUTSIDE a hierarchical stream is the
-        # remaining NotImplementedError surface
-        enc = bytearray(jc.encode_jpeg_lossless(
-            np.zeros((4, 4), dtype=np.uint8), 1
-        ))
-        i = bytes(enc).index(b"\xff\xc3")
-        enc[i + 1] = 0xC7
-        with pytest.raises(NotImplementedError, match="hierarchical"):
-            decode_jpeg(bytes(enc))
-
-    def test_corruption_raises_never_wrong_shape(self):
-        rng = np.random.default_rng(101)
-        arr = rng.integers(0, 256, (10, 10), dtype=np.uint8)
-        enc = bytearray(jc.encode_jpeg_hierarchical(arr, levels=2))
-        sos = bytes(enc).index(b"\xff\xda")
-        flipped = 0
-        for off in range(sos + 12, min(sos + 20, len(enc) - 2)):
-            mut = bytearray(enc)
-            mut[off] ^= 0x20
-            flipped += 1
-            try:
-                raw, _ = jc.decode_jpeg_hierarchical_raw(bytes(mut))
-                assert raw.shape == (10, 10, 1)
-            except ValueError:
-                pass
-        assert flipped > 0
-
-    @given(
-        seed=st.integers(0, 10_000),
-        h=st.integers(1, 17),
-        w=st.integers(1, 17),
-        levels=st.integers(1, 3),
-        arith=st.booleans(),
-    )
-    @settings(max_examples=20, deadline=None)
-    def test_fuzz_bit_exact(self, seed, h, w, levels, arith):
-        rng = np.random.default_rng(seed)
-        arr = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        raw, _ = jc.decode_jpeg_hierarchical_raw(
-            jc.encode_jpeg_hierarchical(
-                arr, levels=levels, arithmetic=arith
-            )
-        )
-        assert np.array_equal(raw[..., 0], arr)
-
-
-class TestHierarchicalDCT:
-    """Annex J hierarchical mode with SEQUENTIAL DCT frames (round-11
-    continuation — the last T.81 frame family): a non-differential
-    DCT first frame (SOF0/SOF9), differential sequential DCT frames
-    (SOF5/SOF13) coding the EXP-expanded-reference difference image
-    with no level shift and DC coded WITHOUT prediction, and a final
-    lossless differential correction frame (SOF7/SOF15) that makes
-    the lossy pyramid round-trip BIT-EXACT."""
-
-    def test_exact_round_trip_depths_and_coders(self):
-        rng = np.random.default_rng(103)
-        for arith in (False, True):
-            for levels in (1, 2, 3):
-                arr = rng.integers(0, 256, (13, 17), dtype=np.uint8)
-                raw, prec = jc.decode_jpeg_hierarchical_raw(
-                    jc.encode_jpeg_hierarchical_dct(
-                        arr, levels=levels, arithmetic=arith
-                    )
-                )
-                assert prec == 8
-                assert np.array_equal(raw[..., 0], arr)
-
-    def test_rgb_and_marker_anatomy(self):
-        rng = np.random.default_rng(107)
-        rgb = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-        enc = jc.encode_jpeg_hierarchical_dct(rgb, levels=3)
-        for m in (
-            b"\xff\xde",  # DHP
-            b"\xff\xdb",  # DQT (DCT frames carry a quantizer)
-            b"\xff\xc0",  # non-differential first frame
-            b"\xff\xdf",  # EXP
-            b"\xff\xc5",  # differential sequential DCT
-            b"\xff\xc7",  # final lossless correction
-        ):
-            assert m in enc
-        assert np.array_equal(decode_jpeg(enc), rgb)
-        ea = jc.encode_jpeg_hierarchical_dct(rgb, levels=2, arithmetic=True)
-        for m in (b"\xff\xc9", b"\xff\xcd", b"\xff\xcf", b"\xff\xcc"):
-            assert m in ea  # SOF9, SOF13, SOF15, DAC
-        assert np.array_equal(decode_jpeg(ea), rgb)
-
-    def test_lossy_pyramid_without_correction(self):
-        # smooth content: close but not exact; the correction frame
-        # is what buys exactness
-        y, x = np.ogrid[0:32, 0:32]
-        arr = ((y * 3 + x * 2) % 200 + 20).astype(np.uint8)
-        e = jc.encode_jpeg_hierarchical_dct(
-            arr, levels=2, final_lossless=False
-        )
-        assert b"\xff\xc7" not in e
-        raw, _ = jc.decode_jpeg_hierarchical_raw(e)
-        err = np.abs(raw[..., 0].astype(int) - arr.astype(int))
-        assert err.max() <= 16 and err.mean() < 4
-
-    def test_block_flat_even_subspace_exact_even_when_lossy(self):
-        # the q254 exactness argument survives the pyramid when every
-        # LEVEL is DC-only: a constant even image decimates to itself
-        arr = np.full((24, 24), 108, dtype=np.uint8)
-        for arith in (False, True):
-            e = jc.encode_jpeg_hierarchical_dct(
-                arr, levels=3, arithmetic=arith, final_lossless=False
-            )
-            raw, _ = jc.decode_jpeg_hierarchical_raw(e)
-            assert np.array_equal(raw[..., 0], arr)
-
-    def test_sequential_scan_under_progressive_sof_is_corrupt(self):
-        # flipping SOF0 -> SOF2 makes the sequential Ss=0/Se=63 SOS
-        # an ill-formed progressive DC scan: ValueError (corruption),
-        # not a silent misparse — progressive frames themselves now
-        # DECODE inside hierarchical streams (see
-        # TestHierarchicalProgressive)
-        arr = np.full((8, 8), 90, dtype=np.uint8)
-        enc = bytearray(jc.encode_jpeg_hierarchical_dct(arr, levels=1))
-        enc[bytes(enc).index(b"\xff\xc0") + 1] = 0xC2
-        with pytest.raises(ValueError, match="Se=0"):
-            jc.decode_jpeg_hierarchical_raw(bytes(enc))
-
-    def test_subsampled_hierarchical_dct_round_trips(self):
-        # round-12 third pass — the LAST variant gate: subsampled
-        # DCT frames inside hierarchical streams. Components carry
-        # their A.1.1 dims through every frame (MCU-interleaved or
-        # per-component scans), EXP expands per component, and the
-        # final lossless frame corrects each DECIMATED plane exactly
-        # (the raw return replicates planes up to the DHP grid)
-        rng = np.random.default_rng(97)
-        arr = rng.integers(0, 256, (21, 19, 3), dtype=np.uint8)
-
-        def expected(a, sampling):
-            hmax = max(h2 for h2, _ in sampling)
-            vmax = max(v2 for _, v2 in sampling)
-            hh, ww = a.shape[:2]
-            outs = []
-            for c, (hs, vs) in enumerate(sampling):
-                p = a[..., c][:: vmax // vs, :: hmax // hs]
-                p = np.repeat(
-                    np.repeat(p, vmax // vs, axis=0),
-                    hmax // hs, axis=1,
-                )
-                outs.append(p[:hh, :ww])
-            return np.stack(outs, -1)
-
-        for samp in (
-            ((1, 1), (2, 2), (2, 2)),  # 4:2:0-style
-            ((1, 2), (2, 1), (2, 2)),  # mixed axes
-        ):
-            for arith in (False, True):
-                for il in (True, False):
-                    enc = jc.encode_jpeg_hierarchical_dct(
-                        arr, levels=2, arithmetic=arith,
-                        restart_interval=3, interleave=il,
-                        sampling=samp,
-                    )
-                    dec, p = jc.decode_jpeg_hierarchical_raw(enc)
-                    assert p == 8
-                    assert (dec == expected(arr, samp)).all(), (
-                        samp, arith, il,
-                    )
-
-    def test_subsampled_12bit_hierarchical_dct(self):
-        rng = np.random.default_rng(101)
-        arr = rng.integers(0, 4096, (17, 15, 3), dtype=np.uint16)
-        samp = ((1, 1), (2, 2), (2, 2))
-        enc = jc.encode_jpeg_hierarchical_dct(
-            arr, levels=2, precision=12, sampling=samp
-        )
-        dec, p = jc.decode_jpeg_hierarchical_raw(enc)
-        assert p == 12
-        hh, ww = arr.shape[:2]
-        for c, (hs, vs) in enumerate(samp):
-            want = arr[..., c][:: 2 // vs, :: 2 // hs]
-            want = np.repeat(
-                np.repeat(want, 2 // vs, axis=0), 2 // hs, axis=1
-            )[:hh, :ww]
-            assert (dec[..., c] == want).all(), c
-
-    def test_interleaved_lossless_scan_over_subsampled_gated(self):
-        # the honest residual: H.2's MCU sample interleave for
-        # subsampled lossless members — per-component scans (the
-        # form this encoder emits) are the supported path
-        rng = np.random.default_rng(103)
-        arr = rng.integers(0, 256, (12, 12, 3), dtype=np.uint8)
-        enc = bytearray(
-            jc.encode_jpeg_hierarchical_dct(
-                arr, levels=1, sampling=((1, 1), (2, 2), (2, 2))
-            )
-        )
-        # rewrite the final lossless frame's three per-component
-        # scans into one interleaved scan: find the SOF7, then its
-        # first SOS and patch Ns up — simpler: assert the encoder
-        # emitted per-component scans (the supported form) and the
-        # decoder accepts them
-        assert enc.count(b"\xff\xda") >= 4
-        dec, _ = jc.decode_jpeg_hierarchical_raw(bytes(enc))
-        assert dec.shape == (12, 12, 3)
-
-    def test_corruption_raises_never_wrong_shape(self):
-        rng = np.random.default_rng(109)
-        arr = rng.integers(0, 256, (10, 10), dtype=np.uint8)
-        enc = bytearray(jc.encode_jpeg_hierarchical_dct(arr, levels=2))
-        sos = bytes(enc).index(b"\xff\xda")
-        flipped = 0
-        for off in range(sos + 12, min(sos + 20, len(enc) - 2)):
-            mut = bytearray(enc)
-            mut[off] ^= 0x20
-            flipped += 1
-            try:
-                raw, _ = jc.decode_jpeg_hierarchical_raw(bytes(mut))
-                assert raw.shape == (10, 10, 1)
-            except ValueError:
-                pass
-        assert flipped > 0
-
-    @given(
-        seed=st.integers(0, 10_000),
-        h=st.integers(1, 17),
-        w=st.integers(1, 17),
-        levels=st.integers(1, 3),
-        arith=st.booleans(),
-        quality=st.sampled_from([25, 50, 90]),
-    )
-    @settings(max_examples=20, deadline=None)
-    def test_fuzz_bit_exact(self, seed, h, w, levels, arith, quality):
-        rng = np.random.default_rng(seed)
-        arr = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        raw, _ = jc.decode_jpeg_hierarchical_raw(
-            jc.encode_jpeg_hierarchical_dct(
-                arr, quality=quality, levels=levels, arithmetic=arith
-            )
-        )
-        assert np.array_equal(raw[..., 0], arr)
-
-
-class TestHierarchicalProgressive:
-    """Annex J hierarchical mode with PROGRESSIVE DCT frames — the
-    final T.81 frame family: SOF2/SOF10 non-differential first
-    frame, SOF6/SOF14 DIFFERENTIAL PROGRESSIVE frames (spectral
-    selection scan sets, DC coded WITHOUT prediction), closed
-    bit-exact by the SOF7/SOF15 lossless correction frame. With this
-    every T.81 frame type decodes; remaining gates are variants
-    (subsampling/precision/restarts inside hierarchical streams)."""
-
-    def test_exact_round_trip_depths_and_coders(self):
-        rng = np.random.default_rng(113)
-        for arith in (False, True):
-            for levels in (1, 2, 3):
-                arr = rng.integers(0, 256, (13, 17), dtype=np.uint8)
-                raw, prec = jc.decode_jpeg_hierarchical_raw(
-                    jc.encode_jpeg_hierarchical_dct(
-                        arr, levels=levels, arithmetic=arith,
-                        progressive=True,
-                    )
-                )
-                assert prec == 8
-                assert np.array_equal(raw[..., 0], arr)
-
-    def test_rgb_and_marker_anatomy(self):
-        rng = np.random.default_rng(127)
-        rgb = rng.integers(0, 256, (9, 11, 3), dtype=np.uint8)
-        enc = jc.encode_jpeg_hierarchical_dct(
-            rgb, levels=2, progressive=True
-        )
-        for m in (b"\xff\xc2", b"\xff\xc6", b"\xff\xc7"):
-            assert m in enc  # SOF2, SOF6, final SOF7
-        # one DC scan + 2 bands x 3 comps per DCT frame + the
-        # lossless correction scan, twice (two pyramid levels)
-        assert enc.count(b"\xff\xda") == 2 * 7 + 1
-        assert np.array_equal(decode_jpeg(enc), rgb)
-        ea = jc.encode_jpeg_hierarchical_dct(
-            rgb, levels=2, progressive=True, arithmetic=True
-        )
-        for m in (b"\xff\xca", b"\xff\xce", b"\xff\xcf"):
-            assert m in ea  # SOF10, SOF14, SOF15
-        assert np.array_equal(decode_jpeg(ea), rgb)
-
-    def test_progressive_equals_sequential_pixels_when_lossy(self):
-        # identical quantized coefficients -> identical lossy
-        # reconstruction, progressive vs sequential frame layouts
-        y, x = np.ogrid[0:24, 0:24]
-        arr = ((y * 5 + x * 3) % 211 + 20).astype(np.uint8)
-        seq = jc.decode_jpeg_hierarchical_raw(
-            jc.encode_jpeg_hierarchical_dct(
-                arr, levels=2, final_lossless=False
-            )
-        )[0]
-        prog = jc.decode_jpeg_hierarchical_raw(
-            jc.encode_jpeg_hierarchical_dct(
-                arr, levels=2, final_lossless=False, progressive=True
-            )
-        )[0]
-        assert np.array_equal(seq, prog)
-
-    @given(
-        seed=st.integers(0, 10_000),
-        h=st.integers(1, 17),
-        w=st.integers(1, 17),
-        levels=st.integers(1, 3),
-        arith=st.booleans(),
-    )
-    @settings(max_examples=15, deadline=None)
-    def test_fuzz_bit_exact(self, seed, h, w, levels, arith):
-        rng = np.random.default_rng(seed)
-        arr = rng.integers(0, 256, (h, w), dtype=np.uint8)
-        raw, _ = jc.decode_jpeg_hierarchical_raw(
-            jc.encode_jpeg_hierarchical_dct(
-                arr, levels=levels, arithmetic=arith, progressive=True
-            )
-        )
-        assert np.array_equal(raw[..., 0], arr)
-
-
-def test_hierarchical_sos_corrupt_ns_raises_valueerror():
-    # a flipped Ns byte must classify as CORRUPTION (ValueError),
-    # never an IndexError escaping the multimodal gate contract
-    arr = np.full((10, 10), 77, dtype=np.uint8)
-    for progressive in (False, True):
-        enc = bytearray(
-            jc.encode_jpeg_hierarchical_dct(
-                arr, levels=2, progressive=progressive
-            )
-        )
-        sos = bytes(enc).index(b"\xff\xda")
-        mut = bytearray(enc)
-        mut[sos + 4] ^= 0xFF  # Ns
-        with pytest.raises(ValueError):
-            jc.decode_jpeg_hierarchical_raw(bytes(mut))
-
-
-class TestHierarchicalVariants:
-    """Round-12 variant closures (VERDICT r11 #4): per-component
-    lossless scans (T.81 B.2.3), point transform in hierarchical
-    frames (H.1/J.1: non-differential frames code ``sample >> Pt``,
-    differential frames reconstruct ``ref + (diff << Pt)``), and
-    restart markers inside hierarchical frames — every combination
-    against the bit-exact contract."""
-
-    def test_plain_lossless_per_component_scans(self):
-        rng = np.random.default_rng(41)
-        arr = rng.integers(0, 256, (23, 17, 3), dtype=np.uint8)
-        for pt in (0, 2):
-            for ri in (0, 5):
-                enc = jc.encode_jpeg_lossless(
-                    arr, predictor=4, point_transform=pt,
-                    restart_interval=ri, interleave=False,
-                )
-                # three SOS markers = one scan per component
-                assert enc.count(b"\xff\xda") == 3
-                dec, p = jc.decode_jpeg_lossless_raw(enc)
-                assert p == 8
-                assert (dec == (arr >> pt) << pt).all()
-
-    def test_plain_lossless_arith_per_component_scans(self):
-        rng = np.random.default_rng(43)
-        arr = rng.integers(0, 256, (19, 14, 3), dtype=np.uint8)
-        for ri in (0, 7):
-            enc = jc.encode_jpeg_lossless_arith(
-                arr, restart_interval=ri, interleave=False
-            )
-            assert enc.count(b"\xff\xda") == 3
-            dec, p = jc.decode_jpeg_lossless_raw(enc)
-            assert (dec == arr).all()
-
-    def test_scan_order_swap_decodes_by_component_id(self):
-        # a conforming decoder must key planes by component id, not
-        # scan position: with per-component scans the scan ORDER on
-        # the wire is arbitrary — swap two whole scans and the pixels
-        # must come back identical
-        rng = np.random.default_rng(47)
-        arr = rng.integers(0, 256, (9, 8, 3), dtype=np.uint8)
-        enc = jc.encode_jpeg_lossless(arr, interleave=False)
-        # scans run SOS..(next SOS | EOI); swap scan 2 and scan 3
-        idx = [
-            i for i in range(len(enc) - 1)
-            if enc[i] == 0xFF and enc[i + 1] == 0xDA
-        ]
-        assert len(idx) == 3
-        head, s2, s3 = enc[: idx[1]], enc[idx[1] : idx[2]], enc[idx[2] : -2]
-        swapped = head + s3 + s2 + enc[-2:]
-        dec, _ = jc.decode_jpeg_lossless_raw(swapped)
-        assert (dec == arr).all()
-
-    def test_hierarchical_all_variant_grid(self):
-        rng = np.random.default_rng(53)
-        arr = rng.integers(0, 256, (21, 18, 3), dtype=np.uint8)
-        for arith in (False, True):
-            for pt in (0, 2):
-                for ri in (0, 6):
-                    for il in (True, False):
-                        enc = jc.encode_jpeg_hierarchical(
-                            arr, levels=3, arithmetic=arith,
-                            point_transform=pt,
-                            restart_interval=ri, interleave=il,
-                        )
-                        dec, p = jc.decode_jpeg_hierarchical_raw(enc)
-                        assert p == 8
-                        assert (dec == arr).all(), (arith, pt, ri, il)
-
-    def test_hierarchical_12bit_combined_variants(self):
-        rng = np.random.default_rng(59)
-        g = rng.integers(0, 4096, (13, 9), dtype=np.uint16)
-        enc = jc.encode_jpeg_hierarchical(
-            g, precision=12, levels=2, point_transform=3,
-            restart_interval=4, interleave=False,
-        )
-        dec, p = jc.decode_jpeg_hierarchical_raw(enc)
-        assert p == 12
-        assert (dec[..., 0] == g).all()
-
-    def test_hierarchical_dct_restart_markers(self):
-        rng = np.random.default_rng(61)
-        arr = rng.integers(0, 256, (25, 22, 3), dtype=np.uint8)
-        for arith in (False, True):
-            enc = jc.encode_jpeg_hierarchical_dct(
-                arr, levels=3, arithmetic=arith, restart_interval=3
-            )
-            assert b"\xff\xdd" in enc  # DRI present
-            assert any(
-                bytes([0xFF, 0xD0 + i]) in enc for i in range(8)
-            )
-            dec, _ = jc.decode_jpeg_hierarchical_raw(enc)
-            assert (dec == arr).all()
-
-    def test_point_transform_refinement_pyramid_is_progressive(self):
-        # the classic hierarchical refinement: every frame before the
-        # last codes at Pt=1 (half precision), the final Pt=0 frame
-        # restores bit-exactness — intermediate truncation must stay
-        # within 2^Pt of the source (monotone refinement), which the
-        # encoder's in-range clamp guarantees
-        rng = np.random.default_rng(67)
-        arr = rng.integers(0, 256, (16, 16), dtype=np.uint8)
-        enc = jc.encode_jpeg_hierarchical(
-            arr, levels=2, point_transform=1
-        )
-        dec, _ = jc.decode_jpeg_hierarchical_raw(enc)
-        assert (dec[..., 0] == arr).all()
-
-    def test_sequential_dct_scan_with_nonzero_al_is_corrupt(self):
-        # B.2.3: Al shall be zero in sequential DCT scans — flipping
-        # it on must classify as corruption (ValueError)
-        arr = np.full((10, 10), 80, dtype=np.uint8)
-        enc = bytearray(
-            jc.encode_jpeg_hierarchical_dct(
-                arr, levels=2, final_lossless=False
-            )
-        )
-        sos = bytes(enc).index(b"\xff\xda")
-        ns = enc[sos + 4]
-        enc[sos + 4 + 1 + 2 * ns + 2] = 0x01  # AhAl -> Al=1
-        with pytest.raises(ValueError, match="Al shall be zero"):
-            jc.decode_jpeg_hierarchical_raw(bytes(enc))
-
-    def test_per_component_dct_scans_round_trip(self):
-        # round-12 second pass: sequential-DCT hierarchical frames
-        # split into one scan per component (B.2.3), both entropy
-        # coders, with restarts — grids accumulate per frame and
-        # reconstruct once complete
-        rng = np.random.default_rng(79)
-        arr = rng.integers(0, 256, (20, 18, 3), dtype=np.uint8)
-        for arith in (False, True):
-            for ri in (0, 4):
-                enc = jc.encode_jpeg_hierarchical_dct(
-                    arr, levels=2, arithmetic=arith,
-                    restart_interval=ri, interleave=False,
-                )
-                assert enc.count(b"\xff\xda") > 3  # split scans
-                dec, _ = jc.decode_jpeg_hierarchical_raw(enc)
-                assert (dec == arr).all(), (arith, ri)
-        # combined with 12-bit precision and restarts
-        g = rng.integers(0, 4096, (15, 13, 3), dtype=np.uint16)
-        enc = jc.encode_jpeg_hierarchical_dct(
-            g, levels=2, precision=12, restart_interval=3,
-            interleave=False,
-        )
-        dec, p = jc.decode_jpeg_hierarchical_raw(enc)
-        assert p == 12
-        assert (dec == g).all()
-
-    def test_hierarchical_dct_12bit_sequential(self):
-        # round-12 second pass: 12-bit DCT pyramids (16-bit DQT,
-        # level shift 2048, Table F.1 caps 15/16) under both entropy
-        # coders, with restarts, closed bit-exact by the final
-        # lossless frame
-        rng = np.random.default_rng(71)
-        g = rng.integers(0, 4096, (19, 17), dtype=np.uint16)
-        rgb = rng.integers(0, 4096, (16, 14, 3), dtype=np.uint16)
-        for arith in (False, True):
-            for ri in (0, 3):
-                for arr in (g, rgb):
-                    enc = jc.encode_jpeg_hierarchical_dct(
-                        arr, levels=2, arithmetic=arith,
-                        restart_interval=ri, precision=12,
-                    )
-                    dec, p = jc.decode_jpeg_hierarchical_raw(enc)
-                    want = arr if arr.ndim == 3 else arr[..., None]
-                    assert p == 12
-                    assert (dec == want).all(), (arith, ri, arr.shape)
-
-    def test_hierarchical_dct_12bit_progressive(self):
-        # third pass: 12-bit PROGRESSIVE pyramids (SOF2/SOF10 +
-        # SOF6/SOF14 at P=12 — Table F.1 caps 15/16 in the DC scan,
-        # the 12-bit AC alphabet in the band scans), both coders
-        rng = np.random.default_rng(83)
-        rgb = rng.integers(0, 4096, (16, 14, 3), dtype=np.uint16)
-        for arith in (False, True):
-            enc = jc.encode_jpeg_hierarchical_dct(
-                rgb, levels=2, arithmetic=arith,
-                progressive=True, precision=12,
-            )
-            dec, p = jc.decode_jpeg_hierarchical_raw(enc)
-            assert p == 12
-            assert (dec == rgb).all(), arith
-
-    def test_decode_jpeg_folds_12bit_hierarchical_to_uint8(self):
-        # the q254 payload trick: uint8 pattern << 4 encoded at
-        # 12-bit, folded back by decode_jpeg's >> (P-8) — identical
-        # pixels to the 8-bit path
-        rng = np.random.default_rng(73)
-        a8 = rng.integers(0, 256, (14, 12), dtype=np.uint8)
-        enc = jc.encode_jpeg_hierarchical_dct(
-            a8.astype(np.uint16) << 4, levels=2, precision=12
-        )
-        rgb = jc.decode_jpeg(enc)
-        assert (rgb[..., 0] == a8).all()
-        assert (rgb[..., 1] == a8).all()
-
-    def test_per_component_quant_tables(self):
-        # round-12 fourth pass: the standard two-table practice —
-        # Annex K luminance for component 0 (DQT 0), chrominance for
-        # the rest (DQT 1) — through every hierarchical arrangement;
-        # reconstruction dequantizes each component with ITS table
-        rng = np.random.default_rng(107)
-        arr = rng.integers(0, 256, (18, 16, 3), dtype=np.uint8)
-        for arith in (False, True):
-            for prog in (False, True):
-                enc = jc.encode_jpeg_hierarchical_dct(
-                    arr, levels=2, arithmetic=arith,
-                    progressive=prog, chroma_tables=True,
-                )
-                assert enc.count(b"\xff\xdb") == 2
-                dec, _ = jc.decode_jpeg_hierarchical_raw(enc)
-                assert (dec == arr).all(), (arith, prog)
-        # composes with subsampling, 12-bit and restarts
-        g = rng.integers(0, 4096, (17, 15, 3), dtype=np.uint16)
-        samp = ((1, 1), (2, 2), (2, 2))
-        enc = jc.encode_jpeg_hierarchical_dct(
-            g, levels=2, precision=12, chroma_tables=True,
-            sampling=samp, restart_interval=3,
-        )
-        dec, p = jc.decode_jpeg_hierarchical_raw(enc)
-        assert p == 12
-        hh, ww = g.shape[:2]
-        for c, (hs, vs) in enumerate(samp):
-            want = g[..., c][:: 2 // vs, :: 2 // hs]
-            want = np.repeat(
-                np.repeat(want, 2 // vs, 0), 2 // hs, 1
-            )[:hh, :ww]
-            assert (dec[..., c] == want).all(), c
-
-    def test_subsampled_progressive_hierarchical(self):
-        # round-12 fifth pass: subsampled components through the
-        # PROGRESSIVE hierarchical arrangements — MCU-interleaved DC
-        # scans over the padded grids, per-component AC band scans
-        # over each component's own ceil(dim/8) grid, per-component
-        # finalize crops
-        rng = np.random.default_rng(113)
-        arr = rng.integers(0, 256, (21, 19, 3), dtype=np.uint8)
-        samp = ((1, 1), (2, 2), (2, 2))
-
-        def expected(a):
-            hh, ww = a.shape[:2]
-            outs = []
-            for c, (hs, vs) in enumerate(samp):
-                p = a[..., c][:: 2 // vs, :: 2 // hs]
-                p = np.repeat(
-                    np.repeat(p, 2 // vs, 0), 2 // hs, 1
-                )[:hh, :ww]
-                outs.append(p)
-            return np.stack(outs, -1)
-
-        for arith in (False, True):
-            for ct in (False, True):
-                enc = jc.encode_jpeg_hierarchical_dct(
-                    arr, levels=2, arithmetic=arith,
-                    progressive=True, sampling=samp,
-                    chroma_tables=ct,
-                )
-                dec, _ = jc.decode_jpeg_hierarchical_raw(enc)
-                assert (dec == expected(arr)).all(), (arith, ct)

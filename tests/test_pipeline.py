@@ -177,6 +177,48 @@ class TestWriters:
         ) == ["part=a", "part=b"]
 
 
+class TestLoadTableMemo:
+    """``load_table`` memoizes the built scan plan per session, keyed
+    by the table's file-tree stats: a hit returns the same object, and
+    an in-place rewrite anywhere in the tree must miss."""
+
+    @staticmethod
+    def _rewrite(path, value: int) -> None:
+        import pandas as pd
+
+        before = os.stat(path).st_mtime_ns if path.exists() else 0
+        pd.DataFrame({"v": [value]}).to_parquet(path)  # same file name
+        # coarse-mtime filesystems must still see a new mtime
+        bumped = max(before + 10**9, os.stat(path).st_mtime_ns)
+        os.utime(path, ns=(bumped, bumped))
+
+    def test_hit_and_in_place_rewrites(self, spark, tmp_path):
+        from building_energy_data_pipeline_spark.sources.readers import (
+            load_table,
+        )
+
+        flat = tmp_path / "flat.parquet"
+        nested = tmp_path / "hive.parquet" / "k=1"
+        flat.mkdir()
+        nested.mkdir(parents=True)
+        self._rewrite(flat / "part-0.parquet", 1)
+        self._rewrite(nested / "part-0.parquet", 1)
+        sf = str(tmp_path)
+
+        first = load_table(spark, sf, "flat")
+        assert load_table(spark, sf, "flat") is first
+
+        self._rewrite(flat / "part-0.parquet", 2)
+        assert load_table(spark, sf, "flat") is not first
+
+        hive = load_table(spark, sf, "hive")
+        assert load_table(spark, sf, "hive") is hive
+        self._rewrite(nested / "part-0.parquet", 2)
+        fresh = load_table(spark, sf, "hive")
+        assert fresh is not hive
+        assert [r["v"] for r in fresh.collect()] == [2]
+
+
 class TestAcquire:
     def test_download_skips_existing(self, tmp_path):
         # no network: the skip-if-exists path (zenodo_client.py:44-50)
