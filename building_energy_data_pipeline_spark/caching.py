@@ -33,7 +33,11 @@ docstring for the failure-mode analysis.
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_LOG = logging.getLogger(__name__)
 
 _CACHE_SLOTS: dict[str, tuple[object, DataFrame]] = {}
 
@@ -75,7 +79,7 @@ def _input_files(df: DataFrame) -> frozenset[str]:
             for f in leaf.relation().location().inputFiles():
                 files.add(f)
         except Exception:  # noqa: BLE001 — non-file leaf (range, local…)
-            pass
+            _LOG.debug("input-files probe skipped a leaf", exc_info=True)
     out = frozenset(files)
     df._bedp_input_files = out  # noqa: SLF001
     return out
@@ -138,13 +142,13 @@ def slot_persist(
                 try:
                     prev_df.persist()
                 except Exception:  # noqa: BLE001
-                    pass
+                    _LOG.debug("slot %r re-persist failed", name, exc_info=True)
             return prev_df
         _CACHE_SLOTS.pop(name, None)
         try:
             prev_df.unpersist()
-        except Exception:  # noqa: BLE001
-            pass  # session of the previous invocation may be gone
+        except Exception:  # noqa: BLE001 — previous session may be gone
+            _LOG.debug("slot %r unpersist failed", name, exc_info=True)
     cached = df.persist()
     # track the persist even when semanticHash failed (sig None —
     # warm reuse never matches it, but release_caches can still free
@@ -199,7 +203,7 @@ def slot_lookup(name: str, sig: object, session) -> DataFrame | None:
             try:
                 prev_df.persist()
             except Exception:  # noqa: BLE001
-                pass
+                _LOG.debug("slot %r re-persist failed", name, exc_info=True)
         return prev_df
     return None
 
@@ -207,8 +211,8 @@ def slot_lookup(name: str, sig: object, session) -> DataFrame | None:
 def release_caches() -> None:
     """Unpersist every slot (all modules share this registry)."""
     while _CACHE_SLOTS:
-        _, (_, cached) = _CACHE_SLOTS.popitem()
+        name, (_, cached) = _CACHE_SLOTS.popitem()
         try:
             cached.unpersist()
         except Exception:  # noqa: BLE001 — owning session may be gone
-            pass
+            _LOG.debug("slot %r unpersist failed", name, exc_info=True)

@@ -191,7 +191,8 @@ class StreamingMetricsRecorder:
                 )
             )
         except Exception:  # noqa: BLE001 — metrics are advisory; a
-            pass  # malformed event must never kill the listener bus
+            # malformed event must never kill the listener bus
+            _LOG.debug("streaming progress record skipped", exc_info=True)
 
     def listener(self):
         """Build the PySpark listener object to pass to
@@ -343,7 +344,7 @@ def plan_lint(df: DataFrame) -> list[str]:
                 if node.partitionSpec().isEmpty():
                     findings.append("unpartitioned-window: " + cls)
             except Exception:  # noqa: BLE001 — no partitionSpec()
-                pass
+                _LOG.debug("plan-lint window probe missed", exc_info=True)
         elif cls.startswith("ShuffleExchange"):
             try:
                 if (
@@ -357,5 +358,5 @@ def plan_lint(df: DataFrame) -> list[str]:
                             f"{cls} over {child}"
                         )
             except Exception:  # noqa: BLE001
-                pass
+                _LOG.debug("plan-lint exchange probe missed", exc_info=True)
     return findings

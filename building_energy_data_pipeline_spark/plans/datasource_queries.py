@@ -8,6 +8,7 @@ Streaming job (q258, VERDICT r9 #5).
 
 from __future__ import annotations
 
+import logging
 import tempfile
 import uuid
 
@@ -17,6 +18,8 @@ from pyspark.sql import functions as F
 from ..sources import pydatasource as pds
 from ..sources.readers import ensure_session_confs, load_table
 from .registry import query
+
+_LOG = logging.getLogger(__name__)
 
 #: q253's telemetry shape: one sensor per nation key so the join is
 #: total, two months of days with the middle 30 pushed down
@@ -182,7 +185,7 @@ def q258_python_datasource_stream(
         try:
             spark.catalog.dropTempView(_Q258_SINK.pop())
         except Exception:  # noqa: BLE001 — previous session may be gone
-            pass
+            _LOG.debug("dropping stale sink view failed", exc_info=True)
     stream = (
         spark.readStream.format("synthetic_telemetry")
         .option("sensors", str(_SENSORS))

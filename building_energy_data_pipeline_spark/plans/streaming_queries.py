@@ -13,6 +13,7 @@ demonstrated rather than asserted.
 from __future__ import annotations
 
 import atexit
+import logging
 import tempfile
 import uuid
 
@@ -23,6 +24,8 @@ from pyspark.sql import functions as F
 from ..functions.scalar import dec_sum, dec_sum_sql
 from ..sources.readers import read_events_stream
 from .registry import query
+
+_LOG = logging.getLogger(__name__)
 
 
 #: last memory-sink name per query tag: re-invoking the same query
@@ -51,7 +54,7 @@ def _drain_to_memory(stream, tag: str, output_mode: str) -> "DataFrame":
         try:
             spark.catalog.dropTempView(prev)
         except Exception:  # noqa: BLE001 — previous session may be gone
-            pass
+            _LOG.debug("dropping stale sink view failed", exc_info=True)
     name = f"{tag}_sink_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix=f"{tag}_ckpt_")
     # record the slot BEFORE starting: the memory sink registers the

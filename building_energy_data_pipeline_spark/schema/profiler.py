@@ -1,14 +1,20 @@
 """Column profiling (SURVEY §2.9 T11, §2.4 A4/A9) — the reference's
 ``analyze_schema`` (``src/schema_generator/schema_analyzer.py:24-102``)
-as ONE Spark aggregation pass.
+as ONE Spark aggregate.
 
 The reference computes count / null_count / unique_count /
 unique_ratio, uniqueness & monotonicity flags, and 5 sample values
-per column from a 10 k-row pandas sample. Here the stats for ALL
-columns are a single ``agg`` over the (sampled) DataFrame — at 100 TB
-the profile runs on ``sampling.random_sample`` output by design, but
-nothing below breaks if handed the full table: it is still one
-map-side-combined pass plus one small distinct-sample job per column.
+per column from a 10 k-row pandas sample. Here every statistic and
+every sample for ALL columns comes from one SQL aggregate over the
+caller's DataFrame: the distinct count and the samples both read one
+``array_distinct(collect_set(c))`` per column, so stats and samples
+see the same rows and the call costs one query (at most 2 Spark
+jobs) whatever the column count.
+
+Memory contract: each column's ``collect_set`` holds up to one value
+per input row in the final aggregate buffer, so callers pass a
+sample — ``Pipeline._emit_schema`` passes ``df.limit(10_000)``, and at
+100 TB the input is ``sampling.random_sample`` output by design.
 """
 
 from __future__ import annotations
@@ -47,37 +53,57 @@ def _kind(dt: T.DataType) -> str:
     return "string"
 
 
+def _quote(name: str) -> str:
+    """SQL identifier for a raw column name: dots and backticks in it
+    stay part of the name."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def profile_columns(
     df: DataFrame, sample_values: int = 5
 ) -> list[ColumnInfo]:
     """T11: per-column type inference + stats + recommendations.
 
-    One wide ``agg`` computes every stat for every column
-    (A4's single-pass idiom); only the 5 sample values need one extra
-    tiny job per column (bounded by ``limit``).
+    One ``selectExpr`` aggregate (A4's single-pass idiom) computes
+    every stat for every column as SQL text, one projection turns each
+    column's ``array_distinct(collect_set(c))`` into its distinct
+    count and its samples, and one ``first()`` brings the row back.
+    ``array_distinct`` matters: ``collect_set`` alone may keep several
+    NaNs, where ``count(DISTINCT)`` counts NaN once. The samples are
+    the ``sample_values`` smallest distinct non-null values.
     """
     fields = df.schema.fields
-    aggs: list = [F.count(F.lit(1)).alias("__total")]
+    aggs = ["count(1) AS total"]
+    proj = ["total"]
     for i, f in enumerate(fields):
-        c, k = F.col(f.name), _kind(f.dataType)
-        aggs.append(F.count(c).alias(f"c{i}_count"))
-        aggs.append(F.countDistinct(c).alias(f"c{i}_distinct"))
+        c, k = _quote(f.name), _kind(f.dataType)
+        aggs += [
+            f"count({c}) AS c{i}_count",
+            f"array_distinct(collect_set({c})) AS c{i}_set",
+        ]
+        proj += [
+            f"c{i}_count",
+            f"size(c{i}_set) AS c{i}_distinct",
+            f"slice(array_sort(c{i}_set), 1, {sample_values}) AS c{i}_samples",
+        ]
         if k == "numeric":
-            aggs.append(F.min(c.cast("double")).alias(f"c{i}_min"))
-            aggs.append(F.max(c.cast("double")).alias(f"c{i}_max"))
-            # integral ⇔ every value equals its rounding
-            aggs.append(
-                F.min((c.cast("double") == F.round(c.cast("double"))).cast("int"))
-                .alias(f"c{i}_integral")
-            )
-            # max decimal places from the plain string form; pandas
-            # parity: trailing '.0' counts as 0 places
-            frac = F.regexp_extract(c.cast("string"), r"\.(\d*[1-9])$", 1)
-            aggs.append(F.max(F.length(frac)).alias(f"c{i}_dec"))
+            d = f"CAST({c} AS DOUBLE)"
+            aggs += [
+                f"min({d}) AS c{i}_min",
+                f"max({d}) AS c{i}_max",
+                # integral ⇔ every value equals its rounding
+                f"min(CAST({d} = round({d}) AS INT)) AS c{i}_integral",
+                # max decimal places from the plain string form;
+                # pandas parity: trailing '.0' counts as 0 places
+                f"max(length(regexp_extract(CAST({c} AS STRING), "
+                f"'[.]([0-9]*[1-9])$', 1))) AS c{i}_dec",
+            ]
+            proj += [f"c{i}_min", f"c{i}_max", f"c{i}_integral", f"c{i}_dec"]
         elif k == "string":
-            aggs.append(F.max(F.length(c)).alias(f"c{i}_len"))
-    row = df.agg(*aggs).first()
-    total = row["__total"]
+            aggs.append(f"max(length({c})) AS c{i}_len")
+            proj.append(f"c{i}_len")
+    row = df.selectExpr(*aggs).selectExpr(*proj).first()
+    total = row["total"]
 
     out: list[ColumnInfo] = []
     for i, f in enumerate(fields):
@@ -98,14 +124,6 @@ def profile_columns(
             max_str_len=(row[f"c{i}_len"] or 0) if k == "string" else 0,
             has_tz=isinstance(f.dataType, T.TimestampType),
         )
-        samples = [
-            r[0]
-            for r in df.select(f.name)
-            .where(F.col(f.name).isNotNull())
-            .distinct()
-            .limit(sample_values)
-            .collect()
-        ]
         null_count = total - count
         is_unique = distinct == total
         unique_ratio = distinct / total if total else 0
@@ -126,7 +144,7 @@ def profile_columns(
                     "unique_count": distinct,
                     "unique_ratio": unique_ratio,
                 },
-                sample_values=samples,
+                sample_values=row[f"c{i}_samples"],
                 metadata={
                     "is_unique": is_unique,
                     "contains_nulls": null_count > 0,

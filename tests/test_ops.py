@@ -329,6 +329,34 @@ class TestObserve:
         ]
         assert len(misses) == 2  # .executedPlan() and .plan()
 
+    def test_slot_lookup_logs_failed_repersist(self, caplog, monkeypatch):
+        # a slot hit whose re-persist fails still serves the frame, but
+        # the failure must leave a DEBUG trace: without one the slot
+        # silently recomputes its plan on every read
+        import logging
+        from types import SimpleNamespace
+
+        from building_energy_data_pipeline_spark import caching
+
+        session = object()
+
+        class _Evicted:
+            sparkSession = session
+            storageLevel = SimpleNamespace(useMemory=False, useDisk=False)
+
+            def persist(self):
+                raise RuntimeError("forced persist failure")
+
+        frame = _Evicted()
+        monkeypatch.setitem(caching._CACHE_SLOTS, "t.slot", ("sig", frame))
+        with caplog.at_level(logging.DEBUG, logger=caching.__name__):
+            assert caching.slot_lookup("t.slot", "sig", session) is frame
+        recs = [r for r in caplog.records if r.name == caching.__name__]
+        assert len(recs) == 1
+        assert recs[0].levelno == logging.DEBUG
+        assert "t.slot" in recs[0].getMessage()
+        assert str(recs[0].exc_info[1]) == "forced persist failure"
+
     def test_history_analyze_records_operators(self, spark):
         h = QueryHistory()
         n = h.run("ranged", lambda: spark.range(1000), analyze=True)

@@ -6,6 +6,7 @@ sampling strategies, DDL text, schema diff.
 from __future__ import annotations
 
 import datetime as dt
+import decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -143,6 +144,80 @@ class TestProfiler:
 
         assert infos["empty"].data_type == "TEXT"
 
+    def test_dotted_and_backticked_names(self, spark):
+        """A dot or a backtick in a column name is part of the name,
+        not struct access (CSV headers such as ``kWh.total``)."""
+        df = spark.createDataFrame(
+            [(1, "x"), (2, None), (3, "yy")], "`a.b` long, `c``d` string"
+        )
+        infos = {c.name: c for c in profile_columns(df)}
+        assert set(infos) == {"a.b", "c`d"}
+        ab, cd = infos["a.b"], infos["c`d"]
+        assert ab.data_type == "SMALLINT" and ab.nullable is False
+        assert ab.stats["unique_count"] == 3 and ab.metadata["is_unique"]
+        assert ab.sample_values == [1, 2, 3]
+        assert cd.data_type == "VARCHAR(2)" and cd.nullable is True
+        assert cd.stats == {
+            "count": 3,
+            "null_count": 1,
+            "unique_count": 2,
+            "unique_ratio": 2 / 3,
+        }
+        assert cd.sample_values == ["x", "yy"]
+
+    def test_one_query_whatever_the_width(self, spark):
+        """Every stat and sample of a 12-column table comes from one
+        aggregate: at most 2 Spark jobs, not one per column."""
+        df = spark.range(200).selectExpr(
+            "id",
+            "CAST(id AS INT) AS i",
+            "id * 1.25D AS d",
+            "CAST(id AS FLOAT) AS f",
+            "CAST(id / 8 AS DECIMAL(8, 3)) AS dec",
+            "CAST(id % 7 AS STRING) AS s",
+            "concat('tag-', CAST(id % 3 AS STRING)) AS t",
+            "id % 2 = 0 AS b",
+            "timestamp_seconds(id * 3600) AS ts",
+            "date_add(DATE'2020-01-01', CAST(id AS INT)) AS day",
+            "CAST(NULL AS STRING) AS null_s",
+            "CAST(NULL AS DOUBLE) AS null_d",
+        )
+        sc = spark.sparkContext
+        group = "test-profile-one-query"
+        sc.setJobGroup(group, "profile_columns job count")
+        try:
+            infos = profile_columns(df.limit(10_000))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 1 <= len(jobs) <= 2, f"{len(jobs)} jobs for one profile"
+        assert len(infos) == 12
+        types = {c.name: c.data_type for c in infos}
+        assert types["i"] == "SMALLINT" and types["b"] == "BOOLEAN"
+        assert types["null_s"] == types["null_d"] == "TEXT"
+
+    def test_unique_count_matches_count_distinct(self, spark):
+        """NaN counts once and -0.0 equals 0.0, as in Spark's own
+        count(DISTINCT) — collect_set alone keeps two NaNs."""
+        nan = float("nan")
+        df = spark.createDataFrame(
+            [(0.0,), (-0.0,), (nan,), (nan,), (None,), (1.0,)], "x double"
+        )
+        (info,) = profile_columns(df)
+        want = df.selectExpr("count(DISTINCT x)").first()[0]
+        assert want == 3
+        assert info.stats["unique_count"] == want
+
+    def test_samples_are_smallest_distinct_values(self, spark):
+        vals = [17, 3, None, 42, 3, 8, 99, 1, 8, None, 25]
+        df = spark.createDataFrame([(v,) for v in vals], "v long")
+        (info,) = profile_columns(df)
+        want = sorted({v for v in vals if v is not None})[:5]
+        assert info.sample_values == want == [1, 3, 8, 17, 25]
+        (two,) = profile_columns(df, sample_values=2)
+        assert two.sample_values == [1, 3]
+
     def test_monotonicity(self, spark):
         df = spark.createDataFrame(
             [(1, 10), (2, 20), (3, 15)], "ord int, v int"
@@ -263,6 +338,119 @@ class TestSampling:
 # ---------------------------------------------------------------------------
 
 
+#: ``generate_ddl`` text for ``TestDDL.test_ddl_golden_text``'s table,
+#: as the per-column-job profiler produced it — the one-aggregate
+#: profiler must reproduce it byte for byte.
+_GOLDEN_DDL = """\
+-- Schema generated for Meter-Readings.csv
+-- Generated on 2026-01-01 12:00:00
+-- Number of columns: 13
+
+-- Table Definition
+CREATE TABLE IF NOT EXISTS "meter_readings" (
+    "id" SMALLINT NOT NULL,
+    "reading" NUMERIC(12,6),
+    "tag" VARCHAR(3),
+    "flag" BOOLEAN,
+    "ts" TIMESTAMP WITH TIME ZONE,
+    "price" NUMERIC(15,2) NOT NULL,
+    "empty" TEXT,
+    "big" INTEGER NOT NULL,
+    "ratio" NUMERIC(12,6) NOT NULL,
+    "whole" SMALLINT NOT NULL,
+    "precise" DOUBLE PRECISION NOT NULL,
+    "huge" BIGINT NOT NULL,
+    "dec" NUMERIC(12,6),
+    PRIMARY KEY (id)
+);
+
+-- Column Information:
+-- id:
+--   Type: bigint -> SMALLINT
+--   Nullable: False
+--   Unique Values: 4
+--   Recommendations:
+--     * Consider as primary key candidate
+--
+-- reading:
+--   Type: double -> NUMERIC(12,6)
+--   Nullable: True
+--   Unique Values: 3
+--   Recommendations:
+--
+-- tag:
+--   Type: string -> VARCHAR(3)
+--   Nullable: True
+--   Unique Values: 2
+--   Recommendations:
+--
+-- flag:
+--   Type: boolean -> BOOLEAN
+--   Nullable: True
+--   Unique Values: 2
+--   Recommendations:
+--
+-- ts:
+--   Type: timestamp -> TIMESTAMP WITH TIME ZONE
+--   Nullable: True
+--   Unique Values: 3
+--   Recommendations:
+--
+-- price:
+--   Type: double -> NUMERIC(15,2)
+--   Nullable: False
+--   Unique Values: 4
+--   Recommendations:
+--     * Consider as primary key candidate
+--
+-- empty:
+--   Type: string -> TEXT
+--   Nullable: True
+--   Unique Values: 0
+--   Recommendations:
+--     * Low cardinality - consider using as categorical
+--
+-- big:
+--   Type: int -> INTEGER
+--   Nullable: False
+--   Unique Values: 4
+--   Recommendations:
+--     * Consider as primary key candidate
+--
+-- ratio:
+--   Type: double -> NUMERIC(12,6)
+--   Nullable: False
+--   Unique Values: 4
+--   Recommendations:
+--     * Consider as primary key candidate
+--
+-- whole:
+--   Type: double -> SMALLINT
+--   Nullable: False
+--   Unique Values: 3
+--   Recommendations:
+--
+-- precise:
+--   Type: double -> DOUBLE PRECISION
+--   Nullable: False
+--   Unique Values: 3
+--   Recommendations:
+--
+-- huge:
+--   Type: bigint -> BIGINT
+--   Nullable: False
+--   Unique Values: 4
+--   Recommendations:
+--     * Consider as primary key candidate
+--
+-- dec:
+--   Type: decimal(10,2) -> NUMERIC(12,6)
+--   Nullable: True
+--   Unique Values: 3
+--   Recommendations:
+--"""
+
+
 class TestDDL:
     def test_table_name_derivation(self):
         # reference parametrized cases (test_schema_analysis_orchestrator.py)
@@ -282,6 +470,33 @@ class TestDDL:
         assert '"tag" VARCHAR(1) NOT NULL' in ddl
         assert "-- Column Information:" in ddl
         assert "Consider as primary key candidate" in ddl
+
+    def test_ddl_golden_text(self, spark):
+        D = decimal.Decimal
+        rows = [
+            (1, 1.5, "aa", True, dt.datetime(2020, 1, 1, 0, 0), 9.99, None,
+             40000, 0.125, 1.0, 0.1234567, 3_000_000_000, D("1.50")),
+            (2, 2.0, "bbb", False, dt.datetime(2020, 1, 1, 1, 0), 19.5, None,
+             -5, 1.0, 2.0, 0.5, 1, D("2.25")),
+            (3, None, "aa", None, dt.datetime(2020, 1, 1, 2, 0), 3.0, None,
+             7, 2.0, 3.0, 1.0, 2, None),
+            (4, 4.25, None, True, None, 0.5, None,
+             12, 3.0, 2.0, 1.0, 3, D("-0.10")),
+        ]
+        df = spark.createDataFrame(
+            rows,
+            "id long, reading double, tag string, flag boolean, "
+            "ts timestamp, price double, empty string, big int, "
+            "ratio double, whole double, precise double, huge long, "
+            "dec decimal(10,2)",
+        )
+        ddl = generate_ddl(
+            profile_columns(df),
+            "/data/Meter-Readings.csv",
+            primary_key="id",
+            now=dt.datetime(2026, 1, 1, 12, 0, 0),
+        )
+        assert ddl == _GOLDEN_DDL
 
     def test_primary_key_clause(self, spark):
         df = spark.createDataFrame([(1,)], "id long")
