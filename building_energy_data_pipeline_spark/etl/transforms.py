@@ -13,13 +13,16 @@ shuffle anywhere in this module.
 
 from __future__ import annotations
 
+import functools
 import re
 from collections.abc import Callable, Iterator
-from typing import TYPE_CHECKING
+from concurrent.futures import ThreadPoolExecutor
+from typing import TYPE_CHECKING, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType
+from pyspark.util import inheritable_thread_target
 
 if TYPE_CHECKING:  # pandas only crosses the wire inside mapInPandas
     import pandas as pd
@@ -28,6 +31,9 @@ if TYPE_CHECKING:  # pandas only crosses the wire inside mapInPandas
 #: (``process_function(chunk, meter_type)``,
 #: ``data_transformer.py:240-269``)
 ChunkTransform = Callable[["pd.DataFrame", str], "pd.DataFrame"]
+
+_T = TypeVar("_T")
+_R = TypeVar("_R")
 
 
 # ---------------------------------------------------------------------------
@@ -192,6 +198,30 @@ DEFAULT_DISPATCH: dict[str, Callable[[DataFrame, str], DataFrame]] = {
 }
 
 
+def _run_concurrently(
+    spark: SparkSession, fn: Callable[[_T], _R], items: list[_T]
+) -> list[_R]:
+    """Run ``fn`` over independent ``items`` on a driver thread pool,
+    ``min(len(items), defaultParallelism)`` threads wide.
+
+    A source here is usually many small files, each a one-task Spark
+    job, so one driver thread leaves most task slots idle; the pool
+    overlaps those jobs. Each call runs under
+    ``inheritable_thread_target``, so the caller's job group,
+    description, scheduler pool and session tags carry into the jobs
+    it launches (a plain pool thread has none of them). Results come
+    back in input order, after every item has finished; the first
+    failure in input order is re-raised.
+    """
+    if not items:
+        return []
+    target = inheritable_thread_target(spark)(fn)
+    workers = min(len(items), spark.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [pool.submit(target, item) for item in items]
+    return [f.result() for f in futures]
+
+
 def transform_sources(
     spark: SparkSession,
     folders: dict[str, list[str]],
@@ -209,31 +239,48 @@ def transform_sources(
     Returns ``{folder_name: output_path}``. The reference's temp
     chunk files + concat barrier (``:292-316``) are replaced by one
     lazy plan per folder with an atomic directory write.
+
+    Like the reference's ``ThreadPoolExecutor``, files and folders
+    are independent work run concurrently: every file's schema pass
+    and dispatch transform on a driver pool, then every folder's
+    union and write. A dispatch callable therefore runs on worker
+    threads and must be thread-safe; the built-ins are. Folders that
+    share a name share one output directory, so only the last of
+    them is written, as a sequential overwrite would leave it.
     """
     import os
 
     dispatch = dispatch or DEFAULT_DISPATCH
     partition_by = partition_by or {}
-    out: dict[str, str] = {}
-    for folder, files in folders.items():
-        name = os.path.basename(os.path.normpath(folder))
+    by_name = {os.path.basename(os.path.normpath(f)): f for f in folders}
+    files = [
+        (name, path)
+        for name, folder in by_name.items()
+        for path in folders[folder]
+    ]
+
+    def read(item: tuple[str, str]) -> DataFrame:
+        name, path = item
         fn = next(
             fn for pat, fn in dispatch.items() if re.search(pat, name)
         )
-        parts = []
-        for path in files:
-            stem = os.path.splitext(os.path.basename(path))[0]
-            df = spark.read.option("header", "true").option(
-                "inferSchema", "true"
-            ).csv(path)
-            parts.append(fn(df, stem))
-        unioned = parts[0]
-        for p in parts[1:]:
-            unioned = unioned.unionByName(p)
+        stem = os.path.splitext(os.path.basename(path))[0]
+        df = spark.read.option("header", "true").option(
+            "inferSchema", "true"
+        ).csv(path)
+        return fn(df, stem)
+
+    parts: dict[str, list[DataFrame]] = {name: [] for name in by_name}
+    for (name, _path), df in zip(files, _run_concurrently(spark, read, files)):
+        parts[name].append(df)
+
+    def write(name: str) -> str:
+        unioned = functools.reduce(DataFrame.unionByName, parts[name])
         dest = os.path.join(output_root, name)
         writer = unioned.write.mode("overwrite")
         if name in partition_by:
             writer = writer.partitionBy(*partition_by[name])
         writer.parquet(dest)
-        out[name] = dest
-    return out
+        return dest
+
+    return dict(zip(by_name, _run_concurrently(spark, write, list(by_name))))

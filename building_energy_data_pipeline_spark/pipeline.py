@@ -10,8 +10,11 @@ keeps the same three calls:
 - :meth:`Pipeline.load_data` — the flagship path (§3.1): per parquet
   source, profile → DDL text file → idempotence gate → deduped
   partitioned write. PostgreSQL is replaced by a Parquet warehouse
-  directory (tables ARE directories); staging tables, COPY, thread
-  pools and batched merges are Spark's job machinery.
+  directory (tables ARE directories); staging tables, COPY and
+  batched merges are Spark's job machinery. The reference's thread
+  pool stays, at source grain: files, folders and tables are
+  independent, so ``transform_data`` and ``load_data`` run them
+  concurrently on a driver pool that keeps the caller's job group.
 
 Config is a plain dict mirroring the reference's
 ``config/app_config.yaml`` keys (``project_data.record_id``,
@@ -27,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .config import ConfigManager
 from .etl.loader import OverlapResult, write_idempotent
-from .etl.transforms import transform_sources
+from .etl.transforms import _run_concurrently, transform_sources
 from .schema.ddl import derive_table_name, generate_ddl
 from .schema.profiler import profile_columns
 from .sources.acquire import download_from_zenodo, get_parquet_info, unzip_folders
@@ -101,20 +104,32 @@ class Pipeline:
         """For every parquet source: profile a sample → emit
         ``{table}_schema.sql`` → overlap gate → deduped write into the
         warehouse. Returns per-table gate results (has_overlap=True ⇒
-        nothing written, the reference's skip, §3.1 step 4)."""
+        nothing written, the reference's skip, §3.1 step 4).
+
+        A dataset is a leaf directory of parquet files, or, for a
+        hive-partitioned one, its nearest ancestor not named
+        ``key=value``; each table is loaded once. Tables are
+        independent, so they load concurrently on a driver pool (the
+        reference's ``ThreadPoolExecutor``). Failures: every table runs
+        to completion before the first failure, in discovery order, is
+        re-raised; the other tables' writes stand, and since the gate
+        rejects them on a re-run, re-running after a fix loads only
+        what failed.
+        """
         root = source_root or self.config.get(
             "parquet_output_path",
             os.path.join(self.config["data_sources_path"], "_parquet"),
         )
         unique_cols = self.config["project_data"]["unique_columns"]
         os.makedirs(self.schemas_dir, exist_ok=True)
-        results: dict[str, OverlapResult] = {}
-        for _folder, files in find_sources(root, "parquet").items():
-            # a Spark dataset dir yields its part files; load the dir once
-            dataset = os.path.dirname(files[0])
-            table = derive_table_name(dataset)
-            if table in results:
-                continue
+        datasets: dict[str, str] = {}
+        for dataset in find_sources(root, "parquet"):
+            while "=" in os.path.basename(dataset):
+                dataset = os.path.dirname(dataset)
+            datasets.setdefault(derive_table_name(dataset), dataset)
+
+        def load(table: str) -> OverlapResult:
+            dataset = datasets[table]
             df = self.spark.read.parquet(dataset)
             self._emit_schema(df, dataset, table)
             target = os.path.join(self.warehouse, table)
@@ -123,7 +138,7 @@ class Pipeline:
                 if os.path.isdir(target)
                 else None
             )
-            results[table] = write_idempotent(
+            return write_idempotent(
                 df,
                 target,
                 _TABLE_TYPES.get(table, "metadata" if "building_id" in df.columns else "raw"),
@@ -131,7 +146,9 @@ class Pipeline:
                 existing=existing,
                 partition_by=["meter"] if "meter" in df.columns else None,
             )
-        return results
+
+        tables = list(datasets)
+        return dict(zip(tables, _run_concurrently(self.spark, load, tables)))
 
     def _emit_schema(self, df: DataFrame, source: str, table: str) -> str:
         """§3.1 step 2: sample-profile the source and freeze the DDL

@@ -156,11 +156,13 @@ def write_stream_idempotent(
     from its probe-read check (``data_loader.py:173-177``), enforced
     at finer grain.
 
-    Scale: the anti-join prunes the existing side to the batch's
-    key/time bounds first (predicate pushdown on min/max ts ±
-    tolerance), so each batch touches only the overlapping slice of
-    the warehouse, not its history; ``partition_by`` layout makes
-    that slice partition-pruned.
+    Scale: the anti-join filters the existing side to the batch's
+    min/max ts ± tolerance first, but that filter cannot skip row
+    groups: Spark writes ``timestamp`` columns as INT96, which carry
+    no Parquet column statistics, so each batch still scans every
+    existing row of the table, and no partition predicate prunes it.
+    Skipping by time needs the warehouse written with INT64
+    ``TIMESTAMP_MICROS`` timestamps.
     """
     from pyspark.errors import AnalysisException
     from pyspark.sql import functions as _F

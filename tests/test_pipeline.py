@@ -6,16 +6,24 @@ plus writer/acquisition utilities.
 from __future__ import annotations
 
 import os
+import threading
+import uuid
 import zipfile
 
 import pytest
 
+from building_energy_data_pipeline_spark import pipeline
+from building_energy_data_pipeline_spark.etl.transforms import (
+    _run_concurrently,
+    transform_sources,
+)
 from building_energy_data_pipeline_spark.pipeline import Pipeline
 from building_energy_data_pipeline_spark.sources.acquire import (
     download_from_zenodo,
     get_parquet_info,
     unzip_folders,
 )
+from building_energy_data_pipeline_spark.sources.readers import find_sources
 from building_energy_data_pipeline_spark.sources.writers import (
     csv_to_parquet,
     parquet_to_csv,
@@ -109,6 +117,133 @@ class TestPipelineEndToEnd:
         assert info  # one entry per part file
         first = next(iter(info.values()))
         assert first["num_rows"] >= 0 and first["num_columns"] >= 2
+
+
+class TestConcurrentSources:
+    """Files, folders and tables are independent work: they run on a
+    driver pool that keeps the caller's job group and the sequential
+    results and failure semantics. Each overlap pin waits on a 2-party
+    barrier, so it passes only when two items really run at once."""
+
+    def test_run_concurrently_order_and_first_failure(self, spark):
+        import time
+
+        assert _run_concurrently(spark, lambda i: i * i, [3, 1, 2]) == [9, 1, 4]
+        assert _run_concurrently(spark, lambda i: i, []) == []
+
+        done = []
+
+        def work(i):
+            time.sleep(0.05 * (5 - i))  # later items finish first
+            done.append(i)
+            if i in (2, 4):
+                raise ValueError(i)
+            return i
+
+        with pytest.raises(ValueError) as err:
+            _run_concurrently(spark, work, list(range(5)))
+        assert err.value.args == (2,)
+        assert sorted(done) == [0, 1, 2, 3, 4]  # every item ran
+
+    def test_files_transform_concurrently(self, spark, corpus):
+        barrier = threading.Barrier(2, timeout=60)
+
+        def wait_then_pass(df, _meter_type):
+            barrier.wait()
+            return df
+
+        out = transform_sources(
+            spark,
+            find_sources(str(corpus / "src"), "csv"),
+            str(corpus / "parquet"),
+            dispatch={r".*": wait_then_pass},
+        )
+        assert spark.read.parquet(out["raw"]).count() == 2
+        assert spark.read.parquet(out["metadata"]).count() == 2
+
+    def test_tables_load_concurrently(self, spark, corpus, monkeypatch):
+        barrier = threading.Barrier(2, timeout=60)
+        write = pipeline.write_idempotent
+
+        def wait_then_write(*args, **kwargs):
+            barrier.wait()
+            return write(*args, **kwargs)
+
+        monkeypatch.setattr(pipeline, "write_idempotent", wait_then_write)
+        p = make_pipeline(spark, corpus)
+        p.transform_data()
+        results = p.load_data()
+        assert not results["raw"].has_overlap
+        assert not results["metadata"].has_overlap
+
+    def test_jobs_stay_in_the_callers_job_group(self, spark, corpus):
+        # job ids are handed out in submission order: every id between
+        # the two marker jobs must belong to the caller's group
+        sc = spark.sparkContext
+        tracker = sc.statusTracker()
+        group = f"pool-{uuid.uuid4().hex}"
+
+        def marker(name):
+            sc.setJobGroup(name, "marker")
+            spark.range(1).collect()
+            return tracker.getJobIdsForGroup(name)
+
+        p = make_pipeline(spark, corpus)
+        try:
+            lo = max(marker(f"{group}-lo"))
+            sc.setJobGroup(group, "pipeline")
+            p.transform_data()
+            p.load_data()
+            hi = min(marker(f"{group}-hi"))
+        finally:
+            for key in ("jobGroup.id", "job.description", "job.interruptOnCancel"):
+                sc.setLocalProperty(f"spark.{key}", None)
+        grouped = set(tracker.getJobIdsForGroup(group))
+        assert grouped and grouped == set(range(lo + 1, hi))
+
+    def test_failed_table_leaves_the_others_written(self, spark, corpus):
+        p = make_pipeline(spark, corpus)
+        p.transform_data()
+        unique = p.config["project_data"]["unique_columns"]
+        metadata_keys = unique.pop("metadata")
+
+        with pytest.raises(KeyError, match="metadata"):
+            p.load_data()
+        raw = spark.read.parquet(str(corpus / "warehouse" / "raw"))
+        assert raw.count() == 4
+        assert not os.path.exists(corpus / "warehouse" / "metadata")
+
+        unique["metadata"] = metadata_keys
+        results = p.load_data()
+        assert results["raw"].has_overlap
+        assert not results["metadata"].has_overlap
+        assert spark.read.parquet(str(corpus / "warehouse" / "raw")).count() == 4
+        assert spark.read.parquet(str(corpus / "warehouse" / "metadata")).count() == 2
+
+    def test_hive_partitioned_source_loads_as_one_table(self, spark, corpus):
+        (corpus / "src" / "raw" / "gas.csv").write_text(
+            "timestamp,b1,b2\n2016-01-01 00:00:00,5.0,6.0\n"
+        )
+        transform_sources(
+            spark,
+            find_sources(str(corpus / "src"), "csv"),
+            str(corpus / "parquet"),
+            partition_by={"raw": ["meter"]},
+        )
+        results = make_pipeline(spark, corpus).load_data()
+        assert set(results) == {"raw", "metadata"}
+        raw = spark.read.parquet(str(corpus / "warehouse" / "raw"))
+        assert "meter" in raw.columns
+        assert sorted(
+            (r.meter, r.building_id, r.meter_reading) for r in raw.collect()
+        ) == [
+            ("electricity", "b1", 1.0),
+            ("electricity", "b1", 3.0),
+            ("electricity", "b2", 2.0),
+            ("electricity", "b2", 4.0),
+            ("gas", "b1", 5.0),
+            ("gas", "b2", 6.0),
+        ]
 
 
 class TestWriters:
